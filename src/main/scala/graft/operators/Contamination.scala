@@ -470,8 +470,7 @@ object Contamination {
     val k =
       if (centroidsK > 0) centroidsK
       else Similarity.autoCells(union.count())
-    val dim = c.select(size(col("v"))).head.getInt(0)
-    val centroids = Similarity.trainIvfCentroids(union, k, dim = dim)
+    val centroids = Similarity.trainIvfCentroids(union, k)
     // r20: per-cell cross scan kernel (guide §2.4/§3.3) — the former
     // cell-join candidate relation was DISTINCTed and then shipped both
     // vectors through a two-sided pair join; the kernel scores every

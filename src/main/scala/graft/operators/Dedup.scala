@@ -1245,21 +1245,6 @@ object Dedup {
     * dedupe at ≥0.8 cosine) concentrate pairs inside cells and only
     * improve it.
     *
-    * `spanning = true` (cell feed only) emits per-cell star edges to
-    * the cell's min-id hub plus a verified-residual fallback instead of
-    * every in-cell pair — closure-equal to the full cell feed (see
-    * [[spanningVerifiedPairs]] for the argument). MEASURED CAVEAT: this
-    * only pays when cell-mates are mostly true dups (star edges mostly
-    * verify). IVF cells are recall partitions, not precision buckets —
-    * at moderate thresholds (the 0.45 semantic-cluster composition)
-    * most star edges FAIL, the residual pass degenerates to the full
-    * feed plus two extra verify rounds, and the sf10 A/B ran 146.6 s vs
-    * 38.9 s for the plain feed — so `emb_clusters_lsh` keeps the full
-    * feed, and spanning is reserved for tight-threshold (≥0.8 cosine)
-    * near-dup corpora where cells approach cliques. Contrast minhash
-    * banding, where bucket collisions at any real threshold are
-    * near-cliques and spanning measured 3.2x faster at sf10.
-    *
     * `maxPairsPerCell > 0` (cell feed only) GOVERNS the report: per
     * cell, only a deterministic-hash member sample of the largest m
     * with C(m,2) ≤ maxPairsPerCell emits pairs, so no hot cell can
@@ -1269,73 +1254,40 @@ object Dedup {
     * [[minhashNearDups]]' `maxPairsPerBucket` ships. */
   def embeddingNearDups(emb: DataFrame, threshold: Double,
                         allPairs: Boolean = true, centroidsK: Int = 0,
-                        assign: Int = 2, spanning: Boolean = false,
+                        assign: Int = 2,
                         maxPairsPerCell: Int = 0): DataFrame = {
-    require(!(spanning && allPairs),
-      "spanning applies to the cell-bucketed feed (allPairs = false)")
-    require(maxPairsPerCell == 0 || (!allPairs && !spanning),
-      "maxPairsPerCell caps the cell-bucketed pair REPORT (allPairs = false, spanning = false)")
+    require(maxPairsPerCell == 0 || !allPairs,
+      "maxPairsPerCell caps the cell-bucketed pair REPORT (allPairs = false)")
     val e = Similarity.prepared(emb)
-    val aSide = e.select(col("vec_id").as("a_id"), col("v").as("av"), col("norm").as("anorm"))
-    val bSide = e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("norm").as("bnorm"))
-    // exact-cosine verification of an (a_id, b_id) candidate relation
-    def scored(pairs: DataFrame): DataFrame =
-      pairs.select(
-          col("a_id"), col("b_id"),
+    if (allPairs) {
+      // nested loop over id-ordered pairs: routing the oracle path
+      // through [[verifyCosine]]'s id joins would add two N² joins
+      val aSide = e.select(col("vec_id").as("a_id"), col("v").as("av"), col("norm").as("anorm"))
+      val bSide = e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("norm").as("bnorm"))
+      return aSide.join(bSide, col("a_id") < col("b_id"))
+        .select(col("a_id"), col("b_id"),
           round(cosineWithNorms(dotProduct(col("av"), col("bv")),
             col("anorm"), col("bnorm")), 6).as("cosine"))
         .where(col("cosine") >= threshold)
-    if (allPairs)
-      return scored(aSide.join(bSide, col("a_id") < col("b_id")))
-    val cells = embeddingCells(emb, centroidsK, assign)
-    if (!spanning) {
-      // GOVERNED form: cap per-cell emission to a deterministic-hash
-      // member sample (the embedding twin of [[selfPairsCapped]] —
-      // same ledger shape, published in [[lastCellPairEmissionStats]])
-      val members =
-        if (maxPairsPerCell > 0) {
-          val (kept, st) =
-            cappedMembers(cells, "vec_id", "cell", maxPairsPerCell)
-          lastCellPairEmissionStats = st
-          kept
-        } else cells
-      // r20: per-cell scan kernel (guide §2.4/§3.3 — the r14 relational
-      // feed materialised + DISTINCTed 45.6M candidate rows, then
-      // shipped both vectors into a two-sided join, 38.2 s of
-      // dedup_embedding_lsh's 40.5 s at sf10; the kernel ships each
-      // vector once per assigned cell and the only pair-sized shuffle
-      // left is the verified-report distinct)
-      cellVerifiedPairs(members, e, threshold)
-    } else {
-      // Spanning form for closure consumers — the embedding twin of
-      // [[spanningVerifiedPairs]], with exact cosine as the verifier:
-      // star edges to each cell's min-id hub, residual (members whose
-      // star edge fails ≥threshold) falls back to its cell-mates.
-      // Closure-equal to the full cell feed by the same argument
-      // (every full-feed edge is either hub-redundant or emitted).
-      val hubs = cells.groupBy("cell").agg(min("vec_id").as("hub"))
-      val star = cells.join(hubs, "cell").where(col("vec_id") =!= col("hub"))
-      val starPairs = star.select(col("hub").as("a_id"), col("vec_id").as("b_id"))
-        .distinct().localCheckpoint()
-      val starVerified =
-        scored(starPairs.join(aSide, "a_id").join(bSide, "b_id")).localCheckpoint()
-      val ok = starVerified.select(col("a_id").as("hub"), col("b_id").as("vec_id"))
-      val residual = star.join(ok, Seq("hub", "vec_id"), "left_anti")
-        .select("cell", "vec_id")
-      val resCand = residual.as("r")
-        .join(cells.as("m"),
-          col("r.cell") === col("m.cell") && col("r.vec_id") =!= col("m.vec_id"))
-        .select(least(col("r.vec_id"), col("m.vec_id")).as("a_id"),
-          greatest(col("r.vec_id"), col("m.vec_id")).as("b_id"))
-        .distinct()
-        .join(starPairs, Seq("a_id", "b_id"), "left_anti")
-        .localCheckpoint()
-      val resVerified =
-        scored(resCand.join(aSide, "a_id").join(bSide, "b_id")).localCheckpoint()
-      lastSpanningStats = SpanningStats(starPairs.count(), starVerified.count(),
-        resCand.count(), resVerified.count())
-      starVerified.unionByName(resVerified)
     }
+    val cells = embeddingCells(emb, centroidsK, assign)
+    // GOVERNED form: cap per-cell emission to a deterministic-hash
+    // member sample (the embedding twin of [[selfPairsCapped]] —
+    // same ledger shape, published in [[lastCellPairEmissionStats]])
+    val members =
+      if (maxPairsPerCell > 0) {
+        val (kept, st) =
+          cappedMembers(cells, "vec_id", "cell", maxPairsPerCell)
+        lastCellPairEmissionStats = st
+        kept
+      } else cells
+    // r20: per-cell scan kernel (guide §2.4/§3.3 — the r14 relational
+    // feed materialised + DISTINCTed 45.6M candidate rows, then
+    // shipped both vectors into a two-sided join, 38.2 s of
+    // dedup_embedding_lsh's 40.5 s at sf10; the kernel ships each
+    // vector once per assigned cell and the only pair-sized shuffle
+    // left is the verified-report distinct)
+    cellVerifiedPairs(members, e, threshold)
   }
 
   /** IVF cell assignments for the embedding near-dup family — prepared
@@ -1392,117 +1344,24 @@ object Dedup {
     * round costs exactly ONE shuffle of the directed edge set.
     * Rounds = component diameter; dup graphs are near-cliques
     * (dups of dups of X are dups of X), so 2-3 rounds in practice.
+    * Task retries can only OVERcount that accumulator, and convergence
+    * tests ==0, so it stays exact.
     *
     * The textbook alternative — large-star/small-star alternation
     * (Kiveris et al. 2014), which collapses a C(g,2)-edge clique to a
     * (g−1)-edge star after one round — was implemented and MEASURED
-    * against this on the real pair graphs
-    * ([[connectedComponentsStars]], union-find-pinned identical
+    * against this on the real pair graphs (union-find-pinned identical
     * output): sf10, 25.4M verified pairs over 500k docs: hash-min
     * 41.8 s / 3 rounds vs stars 48.9 s / 2 rounds (warm, same box);
     * sf1 end-to-end `dedup_clusters` 5.6 s vs 8.0 s. The clique
     * collapse does shrink later rounds ~40x, but round 1 still
     * carries the full edge set through TWO star passes (~6 shuffles +
     * distinct each) plus a count/except convergence probe, which
-    * costs more than hash-min's 2 extra one-shuffle rounds. Stars
-    * stay in-tree for adversarially long chains (diameter >> log n),
-    * where hash-min's round count would dominate. */
+    * costs more than hash-min's 2 extra one-shuffle rounds, so
+    * hash-min is the only engine. */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
                           idCol: String = "doc_id",
-                          maxRounds: Int = 20): DataFrame =
-    connectedComponentsHashMin(pairs, nodes, idCol, maxRounds)
-
-  /** Large-star/small-star alternation (Kiveris et al. 2014, "Connected
-    * Components in MapReduce and Beyond") — the measured-and-rejected
-    * alternative to [[connectedComponents]]'s hash-min on THIS
-    * workload's clique-shaped dup graphs (numbers in that doc), kept
-    * for long-chain graphs where O(log n) rounds beat O(diameter).
-    * Large-star connects every node's strictly-larger neighbours to
-    * m = min(neighbourhood ∪ self); small-star folds the smaller ones;
-    * the canonical edge set's fixed point is one star per component.
-    * Output is byte-identical to hash-min (both label by component
-    * min; union-find spec pins agreement on random graphs). */
-  private[graft] def connectedComponentsStars(
-      pairs: DataFrame, nodes: DataFrame,
-      idCol: String = "doc_id", maxRounds: Int = 30): DataFrame = {
-    // canonical (u, v) with u > v; parallel/duplicate edges merged
-    var edges = pairs
-      .select(greatest(col("a_id"), col("b_id")).as("u"),
-        least(col("a_id"), col("b_id")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    // Iterate ONLY over nodes that touch a pair: in a deduplicated
-    // corpus the dup graph is sparse, so everything below is dup-graph-
-    // sized, not corpus-sized — singletons join back once at the end
-    // with cluster_id = own id and never enter a round.
-    val paired = edges.select(col("u").as("id"))
-      .union(edges.select(col("v").as("id"))).distinct().localCheckpoint()
-    var round = 0
-    var prevCnt = edges.count()
-    var converged = prevCnt == 0L
-    while (!converged && round < maxRounds) {
-      // LARGE-STAR: for each node, attach its strictly-larger
-      // neighbours to m = min(neighbours ∪ self). Every undirected
-      // edge is emitted exactly once (from its smaller endpoint's
-      // neighbourhood), already canonical since m <= u < v.
-      // Broadcast-roulette pins (r17 audit): the per-node min tables
-      // are (id, id) rows — delta-compressible longs whose AQE estimate
-      // can undershoot while the deserialized build is heap-sized (the
-      // r16 OOM class). prevCnt (this round's edge count, already
-      // maintained for convergence) bounds both min tables at
-      // 2x edges, so the pin dispatches for free: small dup graphs
-      // keep their broadcasts, corpus-scaled ones pin merge.
-      val minBound = 2L * prevCnt
-      val bidir = edges.select("u", "v")
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = bidir.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val afterLarge = bidir.where(col("v") > col("u"))
-        .join(graft.functions.mergePinned(mins, minBound), "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v")).distinct()
-      // SMALL-STAR: on the canonical (larger endpoint first) edges,
-      // fold each node's smaller neighbours + itself onto their min.
-      val minsS = afterLarge.groupBy("u").agg(min("v").as("m"))
-      val next = afterLarge.join(graft.functions.mergePinned(minsS, minBound), "u")
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(minsS.select(col("u").as("a"), col("m").as("b")))
-        .select(greatest(col("a"), col("b")).as("u"),
-          least(col("a"), col("b")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-        .localCheckpoint()
-      val cnt = next.count()
-      // fixed point iff the canonical set is unchanged; the cheap count
-      // gate skips the except() job on any round that changed the size
-      converged = cnt == prevCnt && next.except(edges).isEmpty
-      prevCnt = cnt
-      edges = next
-      round += 1
-    }
-    lastCcRounds = round
-    if (!converged && prevCnt > 0) sys.error(
-      s"connectedComponents: star alternation did not converge in $maxRounds rounds")
-    // At the fixed point every canonical edge is (member, component
-    // min): members label by their (unique) v, component minima — the
-    // nodes never on a u side — label by themselves, as do singletons.
-    val memberLabels = edges.groupBy("u").agg(min("v").as("cluster_id"))
-      .select(col("u").as("id"), col("cluster_id"))
-    val centers = paired.join(memberLabels.select("id"), Seq("id"), "left_anti")
-      .withColumn("cluster_id", col("id"))
-    val singletons = nodes.select(col(idCol).as("id"))
-      .join(paired, Seq("id"), "left_anti")
-      .withColumn("cluster_id", col("id"))
-    memberLabels.unionByName(centers).unionByName(singletons)
-  }
-
-  /** [[connectedComponents]]'s engine — see its doc for the algorithm
-    * and the measured comparison against [[connectedComponentsStars]].
-    * Convergence is counted DURING the eager checkpoint materialisation
-    * (accumulator bumped as label rows stream through), so every round
-    * is exactly ONE driver-blocking job; task retries can only
-    * OVERcount, and we test ==0, so convergence stays exact. */
-  private[graft] def connectedComponentsHashMin(
-      pairs: DataFrame, nodes: DataFrame,
-      idCol: String = "doc_id", maxRounds: Int = 20): DataFrame = {
+                          maxRounds: Int = 20): DataFrame = {
     val edges = pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
@@ -1792,10 +1651,11 @@ object Dedup {
 
   /** Two-sided exact-cosine verification of candidate (a_id, b_id)
     * pairs: a_id resolves against `aSrc`, b_id against `bSrc` (both
-    * [[Similarity.prepared]]-shaped). ONE implementation so the batch,
-    * incremental, stored-model, and streaming embedding-dedup paths
-    * agree bit-for-bit on what counts as a duplicate — the embedding
-    * analog of [[verifyPairs]]. */
+    * [[Similarity.prepared]]-shaped); returns the (a_id, b_id, cosine)
+    * rows whose 6-dp-rounded cosine is ≥ `threshold`. ONE
+    * implementation so the batch, incremental, stored-model, streaming
+    * and cell-report embedding paths agree bit-for-bit on what counts
+    * as a duplicate — the embedding analog of [[verifyPairs]]. */
   private[graft] def verifyCosine(cand: DataFrame, aSrc: DataFrame,
                                   bSrc: DataFrame,
                                   threshold: Double): DataFrame =
@@ -1804,8 +1664,10 @@ object Dedup {
         col("norm").as("anorm")), "a_id")
       .join(bSrc.select(col("vec_id").as("b_id"), col("v").as("bv"),
         col("norm").as("bnorm")), "b_id")
-      .where(round(cosineWithNorms(dotProduct(col("av"), col("bv")),
-        col("anorm"), col("bnorm")), 6) >= threshold)
+      .select(col("a_id"), col("b_id"),
+        round(cosineWithNorms(dotProduct(col("av"), col("bv")),
+          col("anorm"), col("bnorm")), 6).as("cosine"))
+      .where(col("cosine") >= threshold)
 
   /** Scalar twin of [[verifyCosine]]'s decision — dot/(na*nb), rounded
     * exactly as Spark's `round(col, 6)` rounds a double (HALF_UP via
@@ -1882,15 +1744,7 @@ object Dedup {
             col("x.vec_id") < col("y.vec_id"))
         .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
         .distinct()
-      return cand
-        .join(vecs.select(col("vec_id").as("a_id"), col("v").as("av"),
-          col("norm").as("anorm")), "a_id")
-        .join(vecs.select(col("vec_id").as("b_id"), col("v").as("bv"),
-          col("norm").as("bnorm")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          round(cosineWithNorms(dotProduct(col("av"), col("bv")),
-            col("anorm"), col("bnorm")), 6).as("cosine"))
-        .where(col("cosine") >= threshold)
+      return verifyCosine(cand, vecs, vecs, threshold)
     }
     val cap = scanCapFor(vecs, scanCellCap, maxCellScanBytes)
     val bigCells = occ.where(col("g") > cap).select("cell")
@@ -1930,16 +1784,7 @@ object Dedup {
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
       .distinct()
-    val verifiedBig = candBig
-      .join(vecs.select(col("vec_id").as("a_id"), col("v").as("av"),
-        col("norm").as("anorm")), "a_id")
-      .join(vecs.select(col("vec_id").as("b_id"), col("v").as("bv"),
-        col("norm").as("bnorm")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        round(cosineWithNorms(dotProduct(col("av"), col("bv")),
-          col("anorm"), col("bnorm")), 6).as("cosine"))
-      .where(col("cosine") >= threshold)
-    scanned.unionByName(verifiedBig).distinct()
+    scanned.unionByName(verifyCosine(candBig, vecs, vecs, threshold)).distinct()
   }
 
   /** Two-sided (corpus x benchmark) verified pair report as a per-cell
@@ -1980,15 +1825,7 @@ object Dedup {
           col("x.cell") === col("y.cell"))
         .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
         .distinct()
-      return cand
-        .join(aVecs.select(col("vec_id").as("a_id"), col("v").as("av"),
-          col("norm").as("anorm")), "a_id")
-        .join(bVecs.select(col("vec_id").as("b_id"), col("v").as("bv"),
-          col("norm").as("bnorm")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          round(cosineWithNorms(dotProduct(col("av"), col("bv")),
-            col("anorm"), col("bnorm")), 6).as("cosine"))
-        .where(col("cosine") >= threshold)
+      return verifyCosine(cand, aVecs, bVecs, threshold)
     }
     val cap = scanCapFor(aVecs, scanCellCap, maxCellScanBytes)
     val bigCells = occ.where(col("ga") + col("gb") > cap).select("cell")
@@ -2031,16 +1868,7 @@ object Dedup {
       .join(bigB.as("y"), col("x.cell") === col("y.cell"))
       .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
       .distinct()
-    val verifiedBig = candBig
-      .join(aVecs.select(col("vec_id").as("a_id"), col("v").as("av"),
-        col("norm").as("anorm")), "a_id")
-      .join(bVecs.select(col("vec_id").as("b_id"), col("v").as("bv"),
-        col("norm").as("bnorm")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        round(cosineWithNorms(dotProduct(col("av"), col("bv")),
-          col("anorm"), col("bnorm")), 6).as("cosine"))
-      .where(col("cosine") >= threshold)
-    scanned.unionByName(verifiedBig)
+    scanned.unionByName(verifyCosine(candBig, aVecs, bVecs, threshold))
   }
 
   /** Effective per-cell occupancy cap for the single-task cell kernels:
@@ -2436,10 +2264,7 @@ object Dedup {
     val k =
       if (centroidsK > 0) centroidsK
       else Similarity.autoCells(n)
-    // dim read from the data (one row), not assumed: the stored model
-    // must describe whatever corpus it was built over
-    val dim = e.select(size(col("v"))).as[Int].head()
-    val centroids = Similarity.trainIvfCentroids(e, k, dim = dim)
+    val centroids = Similarity.trainIvfCentroids(e, k)
     e.write.mode("overwrite").parquet(s"$dir/vectors")
     Similarity.cellAssignments(e, centroids, assign)
       .write.mode("overwrite").parquet(s"$dir/cells")

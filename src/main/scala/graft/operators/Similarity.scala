@@ -218,13 +218,6 @@ object Similarity {
       posexplode(array(bucketCols: _*)).as(Seq("table_idx", "bucket")))
   }
 
-  /** IVF coarse quantizer: k centroids trained by a few Lloyd iterations
-    * executed as DataFrame aggregations (assign = argmax cosine against
-    * broadcast centroid literals; update = per-cluster per-dimension
-    * mean via posexplode + groupBy). Only the k x dim centroid matrix
-    * ever reaches the driver — the corpus itself stays distributed, so
-    * training scales to any corpus size. Deterministic: seeded by vec_id
-    * ordering, no RNG. */
   /** Auto cell count for IVF-style bucketing: N/64 at small corpora
     * (the ~64-occupancy SemDeDup shape every oracle-SF spec pins), but
     * capped at 4·√N once that is smaller — a k growing LINEARLY with N
@@ -280,8 +273,16 @@ object Similarity {
     }
   }
 
-  def trainIvfCentroids(e: DataFrame, k: Int = 16, iterations: Int = 3,
-                        dim: Int = 64): Seq[Array[Double]] = {
+  /** IVF coarse quantizer: k centroids trained by a few Lloyd
+    * iterations over the distributed corpus (assign = typed argmax pass
+    * against the broadcast centroid matrix; update = per-partition
+    * (sum, count) accumulators combined per centroid). Only the k x dim
+    * centroid matrix ever reaches the driver — the corpus itself stays
+    * distributed, so training scales to any corpus size. The dimension
+    * is read from the seed centroids, so it always matches the data.
+    * Deterministic: seeded by xxhash64(vec_id) ordering, no RNG. */
+  def trainIvfCentroids(e: DataFrame, k: Int = 16,
+                        iterations: Int = 3): Seq[Array[Double]] = {
     import e.sparkSession.implicits._
     // Training runs 1 + iterations actions over e (init sample + one
     // assign/update job per Lloyd round) — cache it for the loop's
@@ -307,6 +308,7 @@ object Similarity {
       // fail here, not in assignToCentroid: an empty corpus would
       // otherwise surface as an opaque array()-getItem analysis error
       require(centroids.nonEmpty, "cannot train IVF centroids on an empty corpus")
+      val dim = centroids.head.length
       (0 until iterations).foreach { _ =>
         // Assignment: broadcast-matrix argmax in a typed pass for every
         // k (the k x dim matrix rides one broadcast; each task scores
@@ -565,16 +567,6 @@ object Similarity {
     best
   }
 
-  /** IVF-PQ ANN top-k: IVF coarse cells bound the candidate set
-    * (as [[knnIvf]]), but the candidate join ships `m` small PQ codes
-    * + one norm per vector instead of dim doubles — at 100 TB that is
-    * the difference between shuffling the corpus matrix and shuffling
-    * ~1/32nd of it. Scoring uses the inner-product decomposition
-    * dot(q, v) ≈ dot(q, centroid_cell) + Σᵢ LUTᵢ[codeᵢ] where
-    * LUTᵢ[j] = dot(q_subᵢ, codebookᵢⱼ) is computed ONCE per query (not
-    * per candidate), then the top `refine`·k approx candidates per
-    * query are re-ranked with exact cosine so the output quality
-    * tracks the candidate set, not the quantization error. */
   /** A trained IVF-PQ model: coarse centroid matrix, per-subspace
     * codebooks, the encoded codes table, and the residual table that is
     * STILL PERSISTED — callers unpersist it after the consumers of
@@ -590,14 +582,15 @@ object Similarity {
     * implementation feeds both the in-flight search ([[knnIvfPq]]) and
     * the stored index ([[buildIvfPqIndex]]), so their codes can never
     * diverge. */
-  private def trainIvfPq(e: DataFrame, centroidsK: Int, m: Int, kSub: Int,
-                         dim: Int): IvfPqModel = {
+  private def trainIvfPq(e: DataFrame, centroidsK: Int, m: Int,
+                         kSub: Int): IvfPqModel = {
     val spark = e.sparkSession
     import spark.implicits._
+    val centroids = trainIvfCentroids(e, centroidsK)
+    val centArr = centroids.toArray
+    val dim = centArr(0).length
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val subDim = dim / m
-    val centroids = trainIvfCentroids(e, centroidsK, dim = dim)
-    val centArr = centroids.toArray
     val bcCent = spark.sparkContext.broadcast(centArr)
     val residuals = assignToCentroid(e, centroids)
       .select(col("vec_id"), col("centroid_id"), col("v"), col("norm"))
@@ -632,18 +625,29 @@ object Similarity {
     IvfPqModel(centArr, cb, codes, residuals)
   }
 
+  /** IVF-PQ ANN top-k: IVF coarse cells bound the candidate set
+    * (as [[knnIvf]]), but the candidate join ships `m` small PQ codes
+    * + one norm per vector instead of dim doubles — at 100 TB that is
+    * the difference between shuffling the corpus matrix and shuffling
+    * ~1/32nd of it. Scoring uses the inner-product decomposition
+    * dot(q, v) ≈ dot(q, centroid_cell) + Σᵢ LUTᵢ[codeᵢ] where
+    * LUTᵢ[j] = dot(q_subᵢ, codebookᵢⱼ) is computed ONCE per query (not
+    * per candidate), then the top `refine`·k approx candidates per
+    * query are re-ranked with exact cosine so the output quality
+    * tracks the candidate set, not the quantization error. The vector
+    * dimension comes from the data; `m` must divide it. */
   def knnIvfPq(emb: DataFrame, isQuery: Column, k: Int = 10,
                centroidsK: Int = 16, nprobe: Int = 4, m: Int = 8,
-               kSub: Int = 16, refine: Int = 5, dim: Int = 64): DataFrame = {
+               kSub: Int = 16, refine: Int = 5): DataFrame = {
     // one cache of the parsed vectors feeds training, residuals, and
     // the probe pass; the final re-rank job re-derives e from source
     val e = prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model = trainIvfPq(e, centroidsK, m, kSub, dim)
+    val model = trainIvfPq(e, centroidsK, m, kSub)
     // cands materialise inside pqSearch, so both caches can be released
     // as soon as it returns
     val out = pqSearch(e, model.codes, model.centroids, model.codebooks,
-      isQuery, k, nprobe, refine, dim)
+      isQuery, k, nprobe, refine)
     model.residuals.unpersist(false)
     e.unpersist(false)
     out
@@ -652,18 +656,20 @@ object Similarity {
   /** IVF-PQ search phase against an already-built codes table: probe
     * nprobe cells per query, LUT-score the codes, exact-re-rank the
     * refine budget. Shared by [[knnIvfPq]] (codes built in-flight) and
-    * [[searchIvfPqIndex]] (codes loaded from a stored index). The
+    * [[searchIvfPqIndex]] (codes loaded from a stored index); the vector
+    * dimension is read from the centroid matrix. The
     * candidate top-`refine*k` is eagerly materialised (localCheckpoint)
     * so callers may release whatever cache fed `codes`. */
   private def pqSearch(e: DataFrame, codes: DataFrame,
                        centArr: Array[Array[Double]],
                        cb: Array[Array[Array[Double]]], isQuery: Column,
-                       k: Int, nprobe: Int, refine: Int, dim: Int): DataFrame = {
+                       k: Int, nprobe: Int, refine: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = e.sparkSession
     import spark.implicits._
     val m = cb.length
     val kSub = cb(0).length
+    val dim = centArr(0).length
     val subDim = dim / m
     val bcCent = spark.sparkContext.broadcast(centArr)
     val bcCb = spark.sparkContext.broadcast(cb)
@@ -726,12 +732,12 @@ object Similarity {
     * the corpus matrix and is the ONLY per-candidate data a search
     * shuffles. */
   def buildIvfPqIndex(emb: DataFrame, dir: String, centroidsK: Int = 16,
-                      m: Int = 8, kSub: Int = 16, dim: Int = 64): Unit = {
+                      m: Int = 8, kSub: Int = 16): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
     val e = prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model = trainIvfPq(e, centroidsK, m, kSub, dim)
+    val model = trainIvfPq(e, centroidsK, m, kSub)
     model.codes.write.mode("overwrite").parquet(s"$dir/codes")
     model.residuals.unpersist(false)
     e.unpersist(false)
@@ -775,7 +781,8 @@ object Similarity {
                        incrementId: Long): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val (centArr, cb, dim) = loadIvfPqModel(spark, dir)
+    val (centArr, cb) = loadIvfPqModel(spark, dir)
+    val dim = centArr(0).length
     val m = cb.length
     val subDim = dim / m
     val bcCent = spark.sparkContext.broadcast(centArr)
@@ -932,13 +939,13 @@ object Similarity {
                        refine: Int = 5,
                        corpusFilter: Column = null): DataFrame = {
     val spark = emb.sparkSession
-    val (centArr, cb, dim) = loadIvfPqModel(spark, dir)
+    val (centArr, cb) = loadIvfPqModel(spark, dir)
     val codesAll = loadCodes(spark, dir)
     val codes =
       if (corpusFilter == null) codesAll
       else codesAll.join(emb.where(corpusFilter).select(col("vec_id")),
         Seq("vec_id"), "left_semi")
-    pqSearch(prepared(emb), codes, centArr, cb, isQuery, k, nprobe, refine, dim)
+    pqSearch(prepared(emb), codes, centArr, cb, isQuery, k, nprobe, refine)
   }
 
   /** Driver-side (model-sized) load of a stored index's centroid matrix
@@ -946,7 +953,7 @@ object Similarity {
     * from parquet at search time. */
   private def loadIvfPqModel(spark: org.apache.spark.sql.SparkSession,
                              dir: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]], Int) = {
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     import spark.implicits._
     val centArr = spark.read.parquet(s"$dir/centroids")
       .select("centroid_id", "v").as[(Int, Array[Double])]
@@ -961,7 +968,7 @@ object Similarity {
     val dim = centArr(0).length
     require(cb(0)(0).length * m == dim,
       s"index at $dir is inconsistent: ${cb(0)(0).length} x $m sub-dims vs dim $dim")
-    (centArr, cb, dim)
+    (centArr, cb)
   }
 
   /** Serving-shaped probe of a stored IVF-PQ index: a QUERY relation
@@ -978,13 +985,13 @@ object Similarity {
                            dir: String, k: Int = 10, nprobe: Int = 4,
                            refine: Int = 5): DataFrame = {
     val spark = corpus.sparkSession
-    val (centArr, cb, dim) = loadIvfPqModel(spark, dir)
+    val (centArr, cb) = loadIvfPqModel(spark, dir)
     val codes = loadCodes(spark, dir)
     // tag AFTER prepared() (which projects to vec_id/v/norm) so the
     // marker survives; pqSearch's re-rank join prunes it away
     val e = prepared(corpus).withColumn("__q", lit(false))
       .unionByName(prepared(queries).withColumn("__q", lit(true)))
-    pqSearch(e, codes, centArr, cb, col("__q"), k, nprobe, refine, dim)
+    pqSearch(e, codes, centArr, cb, col("__q"), k, nprobe, refine)
   }
 
   /** Embedding-space DRIFT between two corpus releases — the vector

@@ -73,6 +73,10 @@ object Pipeline {
     }
     StageLog.emit("pipeline_start",
       "pipeline" -> pipelineName, "run_id" -> runId)
+    // A run that fails before it is marked done releases its claim, so
+    // a retry of the same spec runs instead of being skipped.
+    var claimSettled = false
+    try {
 
     var stats = Vector.empty[StageStats]
     // (ingestor, watermark col, unprojected increment) when incremental:
@@ -248,6 +252,7 @@ object Pipeline {
       ii.commit(raw, wm, runInfo = pipelineName)
     }
     ledger.foreach(l => { l.clear(key.get); l.checkAndSet(key.get, "done") })
+    claimSettled = true
     // Durable per-stage stats (reference tasks.py:354 per-stage result
     // dicts; logging.py structured logs): one ledger row per stage so
     // "what did pipeline X write yesterday" is a query over the ledger.
@@ -262,6 +267,11 @@ object Pipeline {
       "rows_written" -> writeStats.map(_.rowsWritten).getOrElse(-1L),
       "duration_ms" -> (System.nanoTime() - t0) / 1000000)
     RunResult(transformed, stats, writeStats, runId = runId)
+    } catch {
+      case t: Throwable if !claimSettled =>
+        ledger.foreach(_.clear(key.get))
+        throw t
+    }
     } finally spark.sparkContext.setLocalProperty("graft.correlation.id", prevProp)
     }
   }

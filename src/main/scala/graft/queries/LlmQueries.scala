@@ -1265,8 +1265,8 @@ object LlmQueries {
     // semantic clusters over the DEPLOYABLE bucketed pair feed — the
     // composition a 100 TB corpus actually runs (cluster cells bound the
     // pair compares; the closure is dup-graph-sized either way). The
-    // spanning (star+residual) emission was A/B-measured HERE and
-    // REJECTED: IVF cells are recall partitions, not precision buckets —
+    // embedding spanning (star+residual) arm was A/B-measured HERE and
+    // removed: IVF cells are recall partitions, not precision buckets —
     // at cosine 0.45 most cell-mates are not near-dups, so most star
     // edges fail verification and the residual pass degenerates to the
     // full feed plus two extra verify rounds (sf10: 38.9 s full feed vs

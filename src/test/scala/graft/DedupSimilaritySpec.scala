@@ -155,18 +155,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(st.residualCandidates > 0 && st.residualVerified == 1)
   }
 
-  test("spanning embedding feed: semantic closure identical to the full cell feed") {
-    val emb = spark.read.parquet(s"$docsDir/embeddings.parquet")
-    val full = Dedup.embeddingNearDups(emb, 0.45, allPairs = false)
-    val span = Dedup.embeddingNearDups(emb, 0.45, allPairs = false, spanning = true)
-    assert(span.join(full, Seq("a_id", "b_id"), "left_anti").isEmpty,
-      "spanning emitted a pair the full cell feed does not contain")
-    def labels(pairs: org.apache.spark.sql.DataFrame) =
-      Dedup.connectedComponents(pairs, emb, idCol = "vec_id").orderBy("id")
-        .as[(Long, Long)].collect().toSeq
-    assert(labels(span) == labels(full))
-  }
-
   test("simhash: near-identical docs collide, unrelated docs don't") {
     val a = (1 to 60).map(i => s"tok$i").mkString(" ")
     val b = (1 to 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
@@ -839,7 +827,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert((20L to 22L).forall(out(_) == 20L))
   }
 
-  test("star-alternation components match driver union-find on random graphs") {
+  test("connected components match driver union-find on random graphs") {
     // independent oracle: plain union-find over the collected edge list,
     // labels = component min — exactly the operator's contract. Three
     // deterministic graph shapes: sparse random, clique-heavy (the
@@ -879,11 +867,6 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(got == unionFind(n, es), s"shape $i diverged from union-find")
       // hash-min: rounds tracks graph diameter (sparse random can be ~7+)
       assert(Dedup.lastCcRounds <= 12, s"shape $i took ${Dedup.lastCcRounds} rounds")
-      // the measured-and-rejected star alternation labels identically
-      val stars = Dedup.connectedComponentsStars(pairs, nodes)
-        .as[(Long, Long)].collect().toMap
-      assert(stars == got, s"shape $i: hash-min and star labels diverged")
-      assert(Dedup.lastCcRounds <= 6, s"shape $i stars took ${Dedup.lastCcRounds} rounds")
     }
   }
 
@@ -1448,10 +1431,6 @@ class DedupSimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.embeddingNearDups(emb, 0.45, maxPairsPerCell = 10)
     }
-    intercept[IllegalArgumentException] {
-      Dedup.embeddingNearDups(emb, 0.45, allPairs = false, spanning = true,
-        maxPairsPerCell = 10)
-    }
   }
 
   test("witness-bounded cross feed: survivors match the all-pairs incremental ground truth") {
@@ -1743,27 +1722,49 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  /** `n` random 64-dim vectors with ids from `idBase`; every 50th is a
+    * near-copy of the one before it, so a cell of them verifies pairs. */
+  private def randomVecs(n: Int, idBase: Long, seed: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    var prev = Array.empty[Float]
+    val rows = (0 until n).map { i =>
+      val v =
+        if (i % 50 == 49) prev.map(x => x + 0.05f * rnd.nextGaussian().toFloat)
+        else Array.fill(64)(rnd.nextGaussian().toFloat)
+      prev = v
+      (idBase + i, v)
+    }
+    Similarity.prepared(rows.toDF("vec_id", "embedding"))
+  }
+
+  /** Every vector of `vecs` as a member of cell 0. */
+  private def oneCell(vecs: org.apache.spark.sql.DataFrame) =
+    vecs.select(col("vec_id"), lit(0).as("cell"))
+
   test("cell pair-report scan kernel === the relational cell feed (both arms)") {
     // r20: the per-cell scan kernel replaces the candidate
     // distinct+two-sided-join feed of dedup_embedding_lsh/_capped;
-    // this pins exact (a_id, b_id, cosine) set equality on the real
-    // corpus against the retained relational form, on the scan arm AND
-    // with a tiny occupancy cap that routes every cell through the
-    // relational fallback arm.
+    // this pins exact (a_id, b_id, cosine) set equality against the
+    // retained relational form. The oracle-SF corpus sits under
+    // cellKernelPairLimit, so every call on it takes the relational
+    // feed; one synthetic cell of 2,100 members (C(2100,2) ≈ 2.2M
+    // candidate pairs) passes the limit, so its default call takes the
+    // scan kernel and scanCellCap = 4 routes it to the over-cap arm.
     import org.apache.spark.sql.DataFrame
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val e = Similarity.prepared(emb)
-    val cells = Similarity.cellAssignmentsCached(emb)
-    def relational(members: DataFrame): Set[(Long, Long, Double)] = {
+    val bigVecs = randomVecs(2100, 0L, 11)
+    assert(2100L * 2099 / 2 > Dedup.cellKernelPairLimit)
+    def relational(members: DataFrame, vecs: DataFrame): Set[(Long, Long, Double)] = {
       val cand = members.as("x").join(members.as("y"),
           col("x.cell") === col("y.cell") &&
             col("x.vec_id") < col("y.vec_id"))
         .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
         .distinct()
       cand
-        .join(e.select(col("vec_id").as("a_id"), col("v").as("av"),
+        .join(vecs.select(col("vec_id").as("a_id"), col("v").as("av"),
           col("norm").as("anorm")), "a_id")
-        .join(e.select(col("vec_id").as("b_id"), col("v").as("bv"),
+        .join(vecs.select(col("vec_id").as("b_id"), col("v").as("bv"),
           col("norm").as("bnorm")), "b_id")
         .select(col("a_id"), col("b_id"),
           round(graft.functions.cosineWithNorms(
@@ -1772,48 +1773,139 @@ class DedupSimilaritySpec extends SparkSpec {
         .where(col("cosine") >= 0.45)
         .as[(Long, Long, Double)].collect().toSet
     }
-    val ref = relational(cells)
-    assert(ref.nonEmpty, "oracle SF must produce verified pairs")
-    val fast = Dedup.cellVerifiedPairs(cells, e, 0.45)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(fast == ref)
-    val viaFallback = Dedup.cellVerifiedPairs(cells, e, 0.45, scanCellCap = 4)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaFallback == ref)
+    Seq((Similarity.cellAssignmentsCached(emb), e), (oneCell(bigVecs), bigVecs))
+      .foreach { case (cells, vecs) =>
+        val ref = relational(cells, vecs)
+        assert(ref.nonEmpty, "each input must produce verified pairs")
+        val fast = Dedup.cellVerifiedPairs(cells, vecs, 0.45)
+          .as[(Long, Long, Double)].collect().toSet
+        assert(fast == ref)
+        val viaFallback = Dedup.cellVerifiedPairs(cells, vecs, 0.45, scanCellCap = 4)
+          .as[(Long, Long, Double)].collect().toSet
+        assert(viaFallback == ref)
+      }
   }
 
   test("cross-cell scan kernel === the relational cross feed (semantic decon)") {
+    // same two inputs as the self spec: the oracle-SF split (relational
+    // feed) and one synthetic cell of 1,500 corpus x 1,515 benchmark
+    // members (2.27M cross pairs, over cellKernelPairLimit: scan kernel
+    // by default, over-cap arm at scanCellCap = 4)
     import org.apache.spark.sql.DataFrame
     val all = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
-    val corpus = all.where(col("vec_id") % 11 =!= 0)
-    val bench = all.where(col("vec_id") % 11 === 0)
-    val c = Similarity.prepared(corpus)
-    val b = Similarity.prepared(bench)
+    val c = Similarity.prepared(all.where(col("vec_id") % 11 =!= 0))
+    val b = Similarity.prepared(all.where(col("vec_id") % 11 === 0))
     val k = Similarity.autoCells(all.count())
-    val centroids = Similarity.trainIvfCentroids(
-      c.unionByName(b), k, dim = 64)
-    val cm = Similarity.cellAssignments(c, centroids, 2)
-    val bm = Similarity.cellAssignments(b, centroids, 2)
-    val ref = cm.as("c").join(bm.as("b"), col("c.cell") === col("b.cell"))
-      .select(col("c.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-      .join(c.select(col("vec_id").as("a_id"), col("v").as("av"),
-        col("norm").as("anorm")), "a_id")
-      .join(b.select(col("vec_id").as("b_id"), col("v").as("bv"),
-        col("norm").as("bnorm")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        round(graft.functions.cosineWithNorms(
-          graft.functions.dotProduct(col("av"), col("bv")),
-          col("anorm"), col("bnorm")), 6).as("cosine"))
-      .where(col("cosine") >= 0.45)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(ref.nonEmpty)
-    val fast = Dedup.cellCrossVerifiedPairs(cm, bm, c, b, 0.45)
-      .distinct().as[(Long, Long, Double)].collect().toSet
-    assert(fast == ref)
-    val viaFallback = Dedup.cellCrossVerifiedPairs(cm, bm, c, b, 0.45,
-        scanCellCap = 4)
-      .distinct().as[(Long, Long, Double)].collect().toSet
-    assert(viaFallback == ref)
+    val centroids = Similarity.trainIvfCentroids(c.unionByName(b), k)
+    val bigA = randomVecs(1500, 0L, 12)
+    // the benchmark side repeats every 100th corpus vector under a new
+    // id, so the synthetic cell has cross pairs above the threshold
+    val bigB = randomVecs(1500, 100000L, 13).unionByName(
+      bigA.where(col("vec_id") % 100 === 0)
+        .select((col("vec_id") + 200000L).as("vec_id"), col("v"), col("norm")))
+    assert(1500L * 1500 > Dedup.cellKernelPairLimit)
+    def relational(am: DataFrame, bm: DataFrame, av: DataFrame,
+                   bv: DataFrame): Set[(Long, Long, Double)] =
+      am.as("c").join(bm.as("b"), col("c.cell") === col("b.cell"))
+        .select(col("c.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+        .distinct()
+        .join(av.select(col("vec_id").as("a_id"), col("v").as("av"),
+          col("norm").as("anorm")), "a_id")
+        .join(bv.select(col("vec_id").as("b_id"), col("v").as("bv"),
+          col("norm").as("bnorm")), "b_id")
+        .select(col("a_id"), col("b_id"),
+          round(graft.functions.cosineWithNorms(
+            graft.functions.dotProduct(col("av"), col("bv")),
+            col("anorm"), col("bnorm")), 6).as("cosine"))
+        .where(col("cosine") >= 0.45)
+        .as[(Long, Long, Double)].collect().toSet
+    Seq((Similarity.cellAssignments(c, centroids, 2),
+        Similarity.cellAssignments(b, centroids, 2), c, b),
+      (oneCell(bigA), oneCell(bigB), bigA, bigB))
+      .foreach { case (am, bm, av, bv) =>
+        val ref = relational(am, bm, av, bv)
+        assert(ref.nonEmpty)
+        val fast = Dedup.cellCrossVerifiedPairs(am, bm, av, bv, 0.45)
+          .distinct().as[(Long, Long, Double)].collect().toSet
+        assert(fast == ref)
+        val viaFallback = Dedup.cellCrossVerifiedPairs(am, bm, av, bv, 0.45,
+            scanCellCap = 4)
+          .distinct().as[(Long, Long, Double)].collect().toSet
+        assert(viaFallback == ref)
+      }
+  }
+
+  /** 60 unit vectors of width `dim` with pairwise cosines under 0.7,
+    * plus a near-copy (cosine ≈ 0.995) of every third one, under
+    * shuffled ids. Returns the (vec_id, embedding) table and the planted
+    * (a_id < b_id) pairs — the only pairs at cosine ≥ 0.9. */
+  private def plantedVecs(dim: Int): (org.apache.spark.sql.DataFrame, Set[(Long, Long)]) = {
+    val rnd = new scala.util.Random(dim)
+    def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    def dot(a: Array[Double], b: Array[Double]) = a.indices.map(i => a(i) * b(i)).sum
+    val bases = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+    while (bases.length < 60) {
+      val v = unit(Array.fill(dim)(rnd.nextGaussian()))
+      if (bases.forall(dot(_, v) < 0.7)) bases += v
+    }
+    val copies = bases.indices.filter(_ % 3 == 0).map { i =>
+      i -> unit(bases(i).map(_ + 0.1 / math.sqrt(dim) * rnd.nextGaussian()))
+    }
+    val vecs = bases ++ copies.map(_._2)
+    val ids = rnd.shuffle(vecs.indices.map(_.toLong).toVector)
+    val planted = copies.zipWithIndex.map { case ((i, _), c) =>
+      val (x, y) = (ids(i), ids(bases.length + c))
+      (math.min(x, y), math.max(x, y))
+    }.toSet
+    (vecs.indices.map(i => (ids(i), vecs(i).map(_.toFloat))).toDF("vec_id", "embedding"),
+      planted)
+  }
+
+  test("embedding operators take the vector width from the data (dims 8 and 96)") {
+    // the dim-64 specs' properties, on widths no caller declares
+    import graft.operators.Contamination
+    Seq(8, 96).foreach { dim =>
+      val (emb, planted) = plantedVecs(dim)
+      val exact = Dedup.embeddingNearDups(emb, 0.9, allPairs = true)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      assert(exact == planted, s"dim $dim")
+      // cell report: exact-verified subset, recall as at the oracle SF
+      val bucketed = Dedup.embeddingNearDups(emb, 0.9, allPairs = false)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      assert(bucketed.subsetOf(exact))
+      assert(bucketed.size >= 0.9 * exact.size, s"dim $dim: ${bucketed.size}/${exact.size}")
+      // increment: incoming side of a cross pair, larger id of an
+      // in-batch pair
+      val split = 40L
+      val survivors = Dedup.embeddingIncrement(emb.where(col("vec_id") < split),
+          emb.where(col("vec_id") >= split), threshold = 0.9)
+        .select("vec_id").as[Long].collect().toSet
+      assert(survivors == (split until 80L).toSet -- exact.map(_._2))
+      // semantic decon: flags exactly the corpus side of cross pairs
+      def inBench(id: Long) = id % 3 == 0
+      val flagged = Contamination.flagSemanticOverlap(
+          emb.where(col("vec_id") % 3 =!= 0), emb.where(col("vec_id") % 3 === 0),
+          threshold = 0.9)
+        .where(col("contaminated")).select("vec_id").as[Long].collect().toSet
+      val expect = exact.collect {
+        case (a, b) if inBench(a) != inBench(b) => if (inBench(a)) b else a
+      }
+      assert(expect.nonEmpty && flagged == expect, s"dim $dim")
+      // IVF and IVF-PQ top-k against brute force
+      val brute = Similarity.knnBrute(emb, col("vec_id") < 5, k = 10)
+        .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+      val ivf = Similarity.knnIvf(emb, col("vec_id") < 5, k = 10,
+          centroidsK = 8, nprobe = 4)
+        .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+      val pq = Similarity.knnIvfPq(emb, col("vec_id") < 5, k = 10,
+          centroidsK = 8, nprobe = 4, kSub = 32, refine = 10)
+        .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+      val recallIvf = ivf.intersect(brute).size.toDouble / brute.size
+      val recallPq = pq.intersect(brute).size.toDouble / brute.size
+      assert(ivf.size == brute.size && pq.size == brute.size)
+      assert(recallIvf >= 0.5, s"dim $dim: IVF recall $recallIvf")
+      assert(recallPq >= 0.5 && recallPq >= recallIvf - 0.05,
+        s"dim $dim: IVF-PQ recall $recallPq vs IVF $recallIvf")
+    }
   }
 }

@@ -253,4 +253,21 @@ class PersistenceSpec extends SparkSpec {
     val r2 = Pipeline.runJson(spark, spec, Some(led))
     assert(r2.skippedIdempotent)
   }
+
+  test("pipeline: a failed run releases its idempotency claim, so the retry runs") {
+    val dir = Files.createTempDirectory("graft_retry").toString
+    val src = s"$dir/src.parquet"
+    val out = s"$dir/out"
+    val led = new IdempotencyLedger(s"$dir/ledger")
+    val spec =
+      s"""{"ingestion": {"path": "$src"},
+         | "persistence": {"path": "$out", "strategy": "replace"}}""".stripMargin
+    val err = intercept[IllegalStateException](Pipeline.runJson(spark, spec, Some(led)))
+    assert(err.getMessage.contains("source health check failed"))
+    base.write.parquet(src)
+    val r = Pipeline.runJson(spark, spec, Some(led))
+    assert(!r.skippedIdempotent)
+    assert(r.writeStats.exists(_.rowsWritten == 3))
+    assert(spark.read.parquet(out).count() == 3)
+  }
 }

@@ -203,7 +203,7 @@ class PlanShapeSpec extends SparkSpec {
     // already rotted back once undetected). With the barrier the final
     // adaptive plan reads the checkpoint (0 scans) or the corpus once
     // (tfidf's n_docs branch); >=2 scans of documents = the barrier
-    // rotted again. Same counting method as graft.ScanCountProbe.
+    // rotted again.
     val swept = Seq("text_tfidf", "text_bigram_lp", "text_unigram_lp",
       "corpus_dsir", "text_quality_blend",
       // r19: the heavy-hitter sketches' two-pass feed joined the class
