@@ -466,11 +466,8 @@ object Contamination {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val b = Similarity.prepared(benchmark)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val union = c.unionByName(b)
-    val k =
-      if (centroidsK > 0) centroidsK
-      else Similarity.autoCells(union.count())
-    val centroids = Similarity.trainIvfCentroids(union, k)
+    // centroidsK = 0 sizes the cells from the training pass's own count
+    val centroids = Similarity.trainIvfCentroids(c.unionByName(b), centroidsK)
     // r20: per-cell cross scan kernel (guide §2.4/§3.3) — the former
     // cell-join candidate relation was DISTINCTed and then shipped both
     // vectors through a two-sided pair join; the kernel scores every

@@ -807,11 +807,13 @@ object Dedup {
     * no-silent-caps ledger for scale campaigns: how many star edges
     * were emitted/verified and how large the residual fallback was.
     * Counts come from the already-materialised checkpoints, so reading
-    * them costs no recompute. */
+    * them costs no recompute. `residualBound` is the proven row bound
+    * the residual side hands to `mergePinned` (failed edges x bands). */
   case class SpanningStats(starCandidates: Long, starVerified: Long,
                            residualCandidates: Long, residualVerified: Long,
                            estFullPairs: Long = 0,
-                           dispatchedFull: Boolean = false)
+                           dispatchedFull: Boolean = false,
+                           residualBound: Long = 0)
   @volatile private[graft] var lastSpanningStats: SpanningStats =
     SpanningStats(0, 0, 0, 0)
 
@@ -862,9 +864,12 @@ object Dedup {
     * output is then pair-COMPLETE, a superset of the spanning
     * emission, so every closure consumer is unaffected. The dispatch
     * is recorded in [[lastSpanningStats]]; `fullFeedPairLimit = 0`
-    * forces spanning (specs exercising the star/residual machinery). */
+    * forces spanning (specs exercising the star/residual machinery).
+    * `bands` is the band count `buckets` was built with ([[bandBuckets]]'
+    * default 32); it bounds how many star rows one failed edge yields. */
   private[graft] def spanningVerifiedPairs(buckets: DataFrame, sets: DataFrame,
                                            threshold: Double,
+                                           bands: Int = 32,
                                            fullFeedPairLimit: Long = 2000000L,
                                            materialized: Boolean = false)
       : DataFrame = {
@@ -943,10 +948,9 @@ object Dedup {
     val residual = star.join(mergePinned(failed, nFailed), Seq("hub", "id"),
         "left_semi")
       .select("bucket", "id")
-    // one residual star row per band the failed pair shares; 64 = 2x
-    // the repo-wide bands default (32), so the bound overcounts — and
-    // overcounting is the SAFE direction (it only pins merge earlier)
-    val resBound = nFailed * 64L
+    // one residual star row per band the failed pair shares: at most
+    // `bands` rows per failed edge
+    val resBound = nFailed * bands
     val resCand = mergePinned(residual.as("r"), resBound)
       .join(b.as("m"),
         col("r.bucket") === col("m.bucket") && col("r.id") =!= col("m.id"))
@@ -959,7 +963,7 @@ object Dedup {
     val resVerified = verifyPairs(resCand, sets, sets, threshold)
       .localCheckpoint()
     lastSpanningStats = SpanningStats(starPairs.count(), starVerified.count(),
-      resCand.count(), resVerified.count(), estFull)
+      resCand.count(), resVerified.count(), estFull, residualBound = resBound)
     starVerified.unionByName(resVerified)
   }
 
@@ -1105,7 +1109,7 @@ object Dedup {
     val sets = shingleHashSets(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verified =
-      if (spanning) spanningVerifiedPairs(bandBuckets(sets, k, bands), sets, threshold)
+      if (spanning) spanningVerifiedPairs(bandBuckets(sets, k, bands), sets, threshold, bands)
       else {
         // report form: exactly-once first-band emission — no global
         // DISTINCT over the re-found pairs ([[firstBandPairs]]); the
@@ -1622,7 +1626,7 @@ object Dedup {
     // history at sf10), and its hot-template buckets paid C(g,2) pairs;
     // the witness-bounded cross feed alone moved 101.7 s only to
     // 80.6 s because the self feed dominated.
-    val selfDropped = spanningVerifiedPairs(bIn, setsIn, threshold,
+    val selfDropped = spanningVerifiedPairs(bIn, setsIn, threshold, bands,
         materialized = true)
       .select(col("b_id").as("doc_id"))
     val dropped = crossDropped.select(col("a_id").as("doc_id"))
@@ -2215,12 +2219,10 @@ object Dedup {
     val ex = Similarity.prepared(existing)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // training persists (and releases) its own copy of the union for
-    // the Lloyd loop; the increment side re-prepares inside the step
+    // the Lloyd loop and sizes the cells from it (centroidsK = 0); the
+    // increment side re-prepares inside the step
     val union = ex.unionByName(Similarity.prepared(incoming))
-    val k =
-      if (centroidsK > 0) centroidsK
-      else Similarity.autoCells(union.count())
-    val centroids = Similarity.trainIvfCentroids(union, k)
+    val centroids = Similarity.trainIvfCentroids(union, centroidsK)
     val exCells = Similarity.cellAssignments(ex, centroids, assign)
     // batch form discards the state outputs — don't materialise them
     val (survivors, _, _) = embeddingStateStep(ex, exCells, centroids,

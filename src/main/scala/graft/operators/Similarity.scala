@@ -42,21 +42,20 @@ object Similarity {
 
   private[graft] def clearCellAssignCache(): Unit = cellAssignCache.clear()
 
-  /** [[cellAssignments]] over `centroidsK` (0 = [[autoCells]])
-    * deterministically-trained centroids, served from
-    * [[cellAssignCache]] when this application already trained the same
-    * (corpus, k, assign) — otherwise trained now (prepared vectors
-    * cached for the train+assign loop's lifetime), checkpointed, and
-    * cached for the next consumer; concurrent first callers of one
-    * corpus block on a single train+assign pass ([[PlanCache]]'s
-    * computeIfAbsent). */
+  /** [[cellAssignments]] over `centroidsK` (0 = [[autoCells]], sized
+    * by the training pass's own count) deterministically-trained
+    * centroids, served from [[cellAssignCache]] when this application
+    * already trained the same (corpus, k, assign) — otherwise trained
+    * now (prepared vectors cached for the train+assign lifetime),
+    * checkpointed, and cached for the next consumer; concurrent first
+    * callers of one corpus block on a single train+assign pass
+    * ([[PlanCache]]'s computeIfAbsent). */
   def cellAssignmentsCached(emb: DataFrame, centroidsK: Int = 0,
                             assign: Int = 2): DataFrame =
     cellAssignCache.getOrBuild(emb, s"cells:$centroidsK:$assign") {
       val cached = prepared(emb)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val k = if (centroidsK > 0) centroidsK else autoCells(cached.count())
-      val centroids = trainIvfCentroids(cached, k)
+      val centroids = trainIvfCentroids(cached, centroidsK)
       val cells = cellAssignments(cached, centroids, assign).localCheckpoint()
       cached.unpersist(false)
       cells
@@ -273,95 +272,114 @@ object Similarity {
     }
   }
 
-  /** IVF coarse quantizer: k centroids trained by a few Lloyd
-    * iterations over the distributed corpus (assign = typed argmax pass
-    * against the broadcast centroid matrix; update = per-partition
-    * (sum, count) accumulators combined per centroid). Only the k x dim
-    * centroid matrix ever reaches the driver — the corpus itself stays
+  /** IVF coarse quantizer: `k` centroids (0 = [[autoCells]] of the
+    * row count) trained by a few Lloyd iterations over the distributed
+    * corpus. The driver receives at most one centroid-matrix-sized
+    * partial (or k seed rows) per partition and pass; the corpus stays
     * distributed, so training scales to any corpus size. The dimension
     * is read from the seed centroids, so it always matches the data.
-    * Deterministic: seeded by xxhash64(vec_id) ordering, no RNG. */
+    * Deterministic: seeded by xxhash64(vec_id) ordering, no RNG, and
+    * the partials fold in a fixed order.
+    *
+    * Job shape — every pass runs over ONE deserialized
+    * (xxhash64(vec_id), vec_id, v) RDD of the cached input, built once,
+    * so no pass after the first is planned by Catalyst or AQE:
+    *  - `k = 0` only: one per-partition count sizes the cells;
+    *  - seeds: the first k rows by (xxhash64(vec_id), vec_id), as a
+    *    per-partition top-k the driver merges ([[seedRows]]);
+    *  - each Lloyd round is ONE job with no exchange: every partition
+    *    folds its rows into (sum, count) per centroid against the
+    *    broadcast matrix, and the driver folds those partials in
+    *    partition-index order ([[lloydRound]]).
+    * An empty cell keeps its previous centroid. */
   def trainIvfCentroids(e: DataFrame, k: Int = 16,
                         iterations: Int = 3): Seq[Array[Double]] = {
     import e.sparkSession.implicits._
-    // Training runs 1 + iterations actions over e (init sample + one
-    // assign/update job per Lloyd round) — cache it for the loop's
-    // lifetime so each round reads the cached vectors instead of
-    // re-scanning (at 100 TB: re-reading the corpus per iteration).
-    // Respect a caller's own cache: persisting is conditional so the
-    // finally-unpersist can never evict state the caller still needs.
+    // Every pass reads e, so cache it for the loop's lifetime (at 100 TB:
+    // never re-read the corpus per iteration). Respect a caller's own
+    // cache: persisting is conditional so the finally-unpersist can
+    // never evict state the caller still needs.
     val callerCached =
       e.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val cached =
       if (callerCached) e
       else e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // init: the k rows with the smallest xxhash64(vec_id) — a deterministic
-      // pseudo-random sample. sort+limit compiles to TakeOrderedAndProject
-      // (per-partition top-k, driver merges k rows), so unlike a global
-      // window/ntile no partition ever holds the whole corpus; at 100 TB
-      // every task does an O(rows · log k) heap pass and ships k vectors.
-      var centroids: Seq[Array[Double]] = cached
-        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-        .limit(k)
-        .select("v").as[Array[Double]].collect().toSeq
+      val rows = cached
+        .select(xxhash64(col("vec_id")), col("vec_id"), col("v"))
+        .as[(Long, Long, Array[Double])].rdd
+      // the first pass (the count when k = 0, else the seed pass) also
+      // materialises the cache
+      val seeds = seedRows(rows, if (k > 0) k else autoCells(rows.count()))
       // fail here, not in assignToCentroid: an empty corpus would
       // otherwise surface as an opaque array()-getItem analysis error
-      require(centroids.nonEmpty, "cannot train IVF centroids on an empty corpus")
-      val dim = centroids.head.length
+      require(seeds.nonEmpty, "cannot train IVF centroids on an empty corpus")
+      val vecs = rows.map(_._3)
+      var centroids = seeds
       (0 until iterations).foreach { _ =>
-        // Assignment: broadcast-matrix argmax in a typed pass for every
-        // k (the k x dim matrix rides one broadcast; each task scores
-        // rows in a tight primitive loop). Ties resolve toward the
-        // higher centroid id, matching [[assignToCentroid]].
-        val assigned: org.apache.spark.sql.Dataset[(Int, Array[Double])] = {
-            val bc = cached.sparkSession.sparkContext.broadcast(centroids.toArray)
-            cached.select(col("v")).as[Array[Double]].mapPartitions { it =>
-              val cents = bc.value
-              val dots = new Array[Double](cents.length)
-              it.map { v =>
-                dotsBlocked(v, cents, dots)
-                var best = 0; var bestS = Double.NegativeInfinity; var ci = 0
-                while (ci < cents.length) {
-                  if (dots(ci) >= bestS) { bestS = dots(ci); best = ci }
-                  ci += 1
-                }
-                (best, v)
-              }
+        centroids = lloydRound(vecs, centroids) { (cents, sums, counts) =>
+          val dots = new Array[Double](cents.length)
+          v => {
+            // broadcast-matrix argmax in a tight primitive loop; ties
+            // resolve toward the higher centroid id, matching
+            // [[assignToCentroid]]
+            dotsBlocked(v, cents, dots)
+            var best = 0; var bestS = Double.NegativeInfinity; var ci = 0
+            while (ci < cents.length) {
+              if (dots(ci) >= bestS) { bestS = dots(ci); best = ci }
+              ci += 1
             }
-          }
-        // Lloyd update as per-partition accumulation: each task folds its
-        // rows into k local (sum, count) accumulators and emits AT MOST k
-        // tiny rows — shuffle volume is k x dim doubles per partition, vs
-        // the dim x N exploded rows a posexplode+groupBy update ships. At
-        // 100 TB the update round-trips centroid-matrix-sized data only.
-        val kLocal = k
-        val updated = assigned
-          .mapPartitions { it =>
-            val sums = Array.ofDim[Double](kLocal, dim)
-            val counts = new Array[Long](kLocal)
-            it.foreach { case (c, v) =>
-              counts(c) += 1
-              var i = 0
-              while (i < dim) { sums(c)(i) += v(i); i += 1 }
-            }
-            (0 until kLocal).iterator
-              .filter(counts(_) > 0)
-              .map(c => (c, sums(c), counts(c)))
-          }
-          .groupByKey(_._1)
-          .reduceGroups { (a, b) =>
-            val s = new Array[Double](dim)
+            counts(best) += 1
+            val s = sums(best)
             var i = 0
-            while (i < dim) { s(i) = a._2(i) + b._2(i); i += 1 }
-            (a._1, s, a._3 + b._3)
+            while (i < s.length) { s(i) += v(i); i += 1 }
           }
-          .map { case (c, (_, s, n)) => (c, s.map(_ / n)) }
-          .collect().toMap
-        centroids = centroids.indices.map(i => updated.getOrElse(i, centroids(i)))
+        }
       }
-      centroids
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(centroids)
     } finally if (!callerCached) cached.unpersist(false)
+  }
+
+  /** The values of the first `k` rows by (hash, id): a per-partition
+    * top-k that the driver merges (`takeOrdered` — one job, at most
+    * P × k rows reach the driver). Same rows, in the same order, as
+    * Catalyst's `orderBy(hash, id).limit(k)`. */
+  private def seedRows(rows: org.apache.spark.rdd.RDD[(Long, Long, Array[Double])],
+                       k: Int): Array[Array[Double]] =
+    rows.takeOrdered(k)(Ordering.by((r: (Long, Long, Array[Double])) => (r._1, r._2)))
+      .map(_._3)
+
+  /** One Lloyd round as ONE job with no exchange. `cur` rides a
+    * broadcast; in each partition `fold(cells, sums, counts)` returns
+    * the per-row update of that partition's (sum, count) accumulators,
+    * and the partition ships only the cells it touched (at most cells x
+    * width doubles). The driver folds those partials in the order
+    * `collect` returns them — partition-index order — so the
+    * floating-point sums do not depend on which task finished first.
+    * A cell that received rows moves to their mean; an empty cell keeps
+    * its `cur` value. */
+  private def lloydRound[T](rows: org.apache.spark.rdd.RDD[T], cur: Array[Array[Double]])
+      (fold: (Array[Array[Double]], Array[Array[Double]], Array[Long]) => T => Unit)
+      : Array[Array[Double]] = {
+    val bc = rows.sparkContext.broadcast(cur)
+    val width = cur(0).length
+    val partials = rows.mapPartitions { it =>
+      val cells = bc.value
+      val sums = Array.ofDim[Double](cells.length, width)
+      val counts = new Array[Long](cells.length)
+      it.foreach(fold(cells, sums, counts))
+      Iterator.single(counts.indices.filter(counts(_) > 0).map(c => (c, sums(c), counts(c))))
+    }.collect()
+    bc.destroy()
+    val sums = new Array[Array[Double]](cur.length)
+    val counts = new Array[Long](cur.length)
+    partials.foreach(_.foreach { case (c, s, n) =>
+      if (sums(c) == null) sums(c) = s
+      else { val t = sums(c); var i = 0; while (i < width) { t(i) += s(i); i += 1 } }
+      counts(c) += n
+    })
+    Array.tabulate(cur.length)(c =>
+      if (counts(c) == 0) cur(c) else sums(c).map(_ / counts(c)))
   }
 
   /** Top-`nprobe` centroid scores as an expression over broadcast
@@ -507,48 +525,30 @@ object Similarity {
 
   /** PQ codebooks trained on IVF cell residuals: `m` subspaces of
     * dim/m, `kSub` centroids each, Lloyd-refined from deterministic
-    * seed rows. ALL subspaces train in one typed pass per iteration —
-    * each task folds its rows into m x kSub (sum, count) accumulators
-    * and emits at most m x kSub tiny rows, so per iteration the shuffle
-    * carries codebook-sized data and only the m x kSub x dim/m codebook
-    * matrix reaches the driver. The corpus never leaves the executors. */
-  private def trainPqCodebooks(residuals: DataFrame, init: Array[Array[Array[Double]]],
+    * seed rows. ALL subspaces train together as m x kSub cells, one
+    * [[lloydRound]] per iteration over the residual RDD the caller
+    * built once, so only codebook-sized data moves and the corpus never
+    * leaves the executors. An empty code keeps its previous value. */
+  private def trainPqCodebooks(residuals: org.apache.spark.rdd.RDD[Array[Double]],
+                               init: Array[Array[Array[Double]]],
                                m: Int, kSub: Int, subDim: Int,
                                iterations: Int = 3): Array[Array[Array[Double]]] = {
-    val spark = residuals.sparkSession
-    import spark.implicits._
     var cb = init
     (0 until iterations).foreach { _ =>
-      val bc = spark.sparkContext.broadcast(cb)
-      val updated = residuals.select("r").as[Array[Double]]
-        .mapPartitions { it =>
-          val sums = Array.ofDim[Double](m * kSub, subDim)
-          val counts = new Array[Long](m * kSub)
-          it.foreach { r =>
-            var i = 0
-            while (i < m) {
-              val idx = i * kSub + nearestSub(r, i * subDim, bc.value(i), subDim)
-              counts(idx) += 1
-              var d = 0
-              while (d < subDim) { sums(idx)(d) += r(i * subDim + d); d += 1 }
-              i += 1
-            }
+      cb = lloydRound(residuals, cb.flatten) { (cells, sums, counts) =>
+        val books = cells.grouped(kSub).toArray
+        r => {
+          var i = 0
+          while (i < m) {
+            val idx = i * kSub + nearestSub(r, i * subDim, books(i), subDim)
+            counts(idx) += 1
+            val s = sums(idx)
+            var d = 0
+            while (d < subDim) { s(d) += r(i * subDim + d); d += 1 }
+            i += 1
           }
-          (0 until m * kSub).iterator
-            .filter(counts(_) > 0)
-            .map(x => (x, sums(x), counts(x)))
         }
-        .groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          val s = new Array[Double](subDim)
-          var d = 0
-          while (d < subDim) { s(d) = a._2(d) + b._2(d); d += 1 }
-          (a._1, s, a._3 + b._3)
-        }
-        .map { case (x, (_, s, n)) => (x, s.map(_ / n)) }
-        .collect().toMap
-      cb = Array.tabulate(m, kSub)((i, j) => updated.getOrElse(i * kSub + j, cb(i)(j)))
-      bc.destroy()
+      }.grouped(kSub).toArray
     }
     cb
   }
@@ -571,7 +571,7 @@ object Similarity {
     * codebooks, the encoded codes table, and the residual table that is
     * STILL PERSISTED — callers unpersist it after the consumers of
     * `codes` have materialised. */
-  private case class IvfPqModel(centroids: Array[Array[Double]],
+  private[graft] case class IvfPqModel(centroids: Array[Array[Double]],
                                 codebooks: Array[Array[Array[Double]]],
                                 codes: DataFrame, residuals: DataFrame)
 
@@ -582,7 +582,7 @@ object Similarity {
     * implementation feeds both the in-flight search ([[knnIvfPq]]) and
     * the stored index ([[buildIvfPqIndex]]), so their codes can never
     * diverge. */
-  private def trainIvfPq(e: DataFrame, centroidsK: Int, m: Int,
+  private[graft] def trainIvfPq(e: DataFrame, centroidsK: Int, m: Int,
                          kSub: Int): IvfPqModel = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -605,15 +605,16 @@ object Similarity {
       .toDF("vec_id", "centroid_id", "r", "norm")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // deterministic seeds: kSub pseudo-random residual rows, sliced per
-    // subspace (same xxhash64 trick as the IVF init — no RNG)
-    val seeds = residuals
-      .orderBy(xxhash64(col("vec_id"), lit(1)), col("vec_id"))
-      .limit(kSub)
-      .select("r").as[Array[Double]].collect()
+    // subspace (same xxhash64 trick as the IVF init — no RNG); the seed
+    // pass and every codebook round share this one RDD
+    val rows = residuals
+      .select(xxhash64(col("vec_id"), lit(1)), col("vec_id"), col("r"))
+      .as[(Long, Long, Array[Double])].rdd
+    val seeds = seedRows(rows, kSub)
     require(seeds.nonEmpty, "cannot train an IVF-PQ model on an empty corpus")
     val init = Array.tabulate(m, kSub)((i, j) =>
       seeds(j % seeds.length).slice(i * subDim, (i + 1) * subDim))
-    val cb = trainPqCodebooks(residuals, init, m, kSub, subDim)
+    val cb = trainPqCodebooks(rows.map(_._3), init, m, kSub, subDim)
     val bcCb = spark.sparkContext.broadcast(cb)
     val codes = residuals
       .select(col("vec_id"), col("centroid_id"), col("r"), col("norm"))
@@ -635,9 +636,13 @@ object Similarity {
     * per candidate), then the top `refine`·k approx candidates per
     * query are re-ranked with exact cosine so the output quality
     * tracks the candidate set, not the quantization error. The vector
-    * dimension comes from the data; `m` must divide it. */
+    * dimension comes from the data; `m` must divide it. `centroidsK`
+    * defaults to 0 = [[autoCells]] of the corpus size (16 below 1,088
+    * vectors), so the cells grow with the corpus and recall holds at
+    * scale; training is [[trainIvfCentroids]] then [[trainPqCodebooks]],
+    * one job per Lloyd round each. */
   def knnIvfPq(emb: DataFrame, isQuery: Column, k: Int = 10,
-               centroidsK: Int = 16, nprobe: Int = 4, m: Int = 8,
+               centroidsK: Int = 0, nprobe: Int = 4, m: Int = 8,
                kSub: Int = 16, refine: Int = 5): DataFrame = {
     // one cache of the parsed vectors feeds training, residuals, and
     // the probe pass; the final re-rank job re-derives e from source
@@ -730,8 +735,9 @@ object Similarity {
     * the same sketch-once/probe-forever economics as the dedup bucket
     * tables and HLL sketch tables. At 100 TB the codes table is ~1/32nd
     * the corpus matrix and is the ONLY per-candidate data a search
-    * shuffles. */
-  def buildIvfPqIndex(emb: DataFrame, dir: String, centroidsK: Int = 16,
+    * shuffles. `centroidsK` = 0 (the default) sizes the cells with
+    * [[autoCells]], as [[knnIvfPq]] does. */
+  def buildIvfPqIndex(emb: DataFrame, dir: String, centroidsK: Int = 0,
                       m: Int = 8, kSub: Int = 16): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._

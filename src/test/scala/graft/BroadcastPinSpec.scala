@@ -53,6 +53,30 @@ class BroadcastPinSpec extends SparkSpec {
     assert(bhj(executedNodes(edge.queryExecution.executedPlan)).nonEmpty)
   }
 
+  test("spanning feed: the residual side's proven bound scales with bands") {
+    // every band puts {1, 2, 3} in one bucket; hub 1 matches neither 2
+    // nor 3, so both star edges fail and each failed edge yields one
+    // residual row per band: 2 x bands rows, twice what a fixed 64-band
+    // bound allows at bands = 128
+    val sets = Seq(
+      (1L, Seq(1L, 2L)),
+      (2L, Seq(30L, 31L, 32L)),
+      (3L, Seq(31L, 32L, 33L))).toDF("doc_id", "shash")
+    for (bands <- Seq(32, 128)) {
+      val buckets = (0 until bands).flatMap(b => Seq(1L, 2L, 3L).map(id => (id, b.toLong)))
+        .toDF("id", "bucket")
+      val out = Dedup.spanningVerifiedPairs(buckets, sets, 0.5, bands,
+          fullFeedPairLimit = 0L)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+      assert(out == Set((2L, 3L)))
+      val st = Dedup.lastSpanningStats
+      val nFailed = st.starCandidates - st.starVerified
+      val residualRows = 2L * bands
+      assert(nFailed == 2 && st.residualBound == nFailed * bands, s"bands=$bands: $st")
+      assert(st.residualBound >= residualRows, s"bands=$bands: bound below the residual rows")
+    }
+  }
+
   test("spanning feed's star/residual joins never broadcast (at-scale branch)") {
     // fullFeedPairLimit = 0 forces the spanning branch — the branch a
     // big corpus takes — on this small corpus, so the spec exercises

@@ -437,8 +437,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val e = Similarity.prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = Similarity.autoCells(e.count())
-    val centroids = Similarity.trainIvfCentroids(e, k)
+    val centroids = Similarity.trainIvfCentroids(e, 0)
     val cells = Similarity.cellAssignments(e, centroids, 2).localCheckpoint()
     val fullPairs = cells.as("x").join(cells.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
@@ -598,8 +597,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val inc = Similarity.prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = Similarity.autoCells(inc.count())
-    val centroids = Similarity.trainIvfCentroids(inc, k)
+    val centroids = Similarity.trainIvfCentroids(inc, 0)
     val cells = Similarity.cellAssignments(inc, centroids, 2).localCheckpoint()
     // reference: the r13 pair-feed form (emit all in-cell a<b pairs,
     // exact-cosine verify, drop the b side)
@@ -1795,8 +1793,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val all = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val c = Similarity.prepared(all.where(col("vec_id") % 11 =!= 0))
     val b = Similarity.prepared(all.where(col("vec_id") % 11 === 0))
-    val k = Similarity.autoCells(all.count())
-    val centroids = Similarity.trainIvfCentroids(c.unionByName(b), k)
+    val centroids = Similarity.trainIvfCentroids(c.unionByName(b), 0)
     val bigA = randomVecs(1500, 0L, 12)
     // the benchmark side repeats every 100th corpus vector under a new
     // id, so the synthetic cell has cross pairs above the threshold
