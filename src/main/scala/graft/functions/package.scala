@@ -98,6 +98,14 @@ package object functions {
     if (bare(df.queryExecution.optimizedPlan)) df.count() else -1L
   }
 
+  /** True when `df` is already materialised: held by the CacheManager,
+    * or a checkpoint — its plan is the bare LogicalRDD over the
+    * checkpointed rows, which `Dataset.storageLevel` does not see. A
+    * pass over it reads stored rows, so caching it again only copies. */
+  def materialized(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+      df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
   /** Resolve a builder's `provenRows` parameter: [[autoRows]] (the
     * default) counts only when [[cheapRows]] says the plan makes the
     * count metadata-cheap; any other value is the caller's word. */

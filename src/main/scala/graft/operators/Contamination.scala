@@ -458,14 +458,15 @@ object Contamination {
     * never corpus × benchmark all-pairs — then exact-cosine verified
     * with the codegen'd dot product. The benchmark side is eval-suite
     * sized, so its cell table broadcasts; the corpus-sized work is one
-    * assignment pass + one cell equi-join. */
+    * assignment pass + one cell equi-join. Both prepared sides and
+    * their cell assignments are checkpointed; the verify, the per-row
+    * aggregate and the report join stay one lazy plan that the
+    * caller's action runs. */
   def flagSemanticOverlap(corpus: DataFrame, benchmark: DataFrame,
                           threshold: Double = 0.45, centroidsK: Int = 0,
                           assign: Int = 2): DataFrame = {
-    val c = Similarity.prepared(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = Similarity.prepared(benchmark)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = Similarity.prepared(corpus).localCheckpoint()
+    val b = Similarity.prepared(benchmark).localCheckpoint()
     // centroidsK = 0 sizes the cells from the training pass's own count
     val centroids = Similarity.trainIvfCentroids(c.unionByName(b), centroidsK)
     // r20: per-cell cross scan kernel (guide §2.4/§3.3) — the former
@@ -487,8 +488,6 @@ object Contamination {
       .groupBy(col("a_id").as("vec_id"))
       .agg(count(lit(1)).as("n_benchmark_matches"),
         max(col("cosine")).as("max_cos"))
-      .localCheckpoint() // contamination-sized; lets the caches release
-    c.unpersist(false); b.unpersist(false)
     corpus.select(col("vec_id"))
       .join(matches, Seq("vec_id"), "left")
       .select(col("vec_id"),

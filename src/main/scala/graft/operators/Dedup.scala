@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import graft.functions._
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard
@@ -320,16 +321,24 @@ object Dedup {
     * form ([[verifyPairsBuiltin]], spec-pinned on real corpora) and the
     * DuckDB oracle transfers unchanged. */
   /** Deserialized-bytes bound under which [[verifyPairs]] BROADCASTS
-    * the shingle-set sides instead of leaving the strategy to AQE: the
-    * two builds (a_id- and b_id-keyed over the same table) are alive
-    * together, so the worst case is ~2x this plus hash-relation
-    * overhead — ~3 GB against the 8g driver/executor heap. The
-    * alternative plan is brutal: a pair-keyed sort-merge ships every
-    * surviving pair's FIRST array through the second join's exchange
-    * (measured sf10, 25.4M pairs: 860 CPU-s across the two joins vs
-    * 382 CPU-s for the whole broadcast-verify stage). Dispatch is on a
-    * MEASURED byte count, never an AQE estimate (r16 OOM class). */
-  private val verifyBroadcastSetBytesLimit: Long = 1500L * 1000 * 1000
+    * the shingle-set sides instead of leaving the strategy to AQE,
+    * derived from the heap this JVM actually has: the two builds (a_id-
+    * and b_id-keyed over the same table) are alive together, and each
+    * hashed relation costs about [[hashRelationOverhead]]x its payload
+    * (the UnsafeRow copy plus the hash map's key/pointer arrays), so
+    * the bound keeps both builds within [[verifyBroadcastHeapShare]] of
+    * `Runtime.maxMemory`, leaving the other half to the tasks that
+    * probe them — about 1 GB of payload on an 8 GB heap. The alternative
+    * plan is brutal: a pair-keyed sort-merge ships every surviving
+    * pair's FIRST array through the second join's exchange (measured
+    * sf10, 25.4M pairs: 860 CPU-s across the two joins vs 382 CPU-s for
+    * the whole broadcast-verify stage). Dispatch is on a MEASURED byte
+    * count, never an AQE estimate (r16 OOM class). */
+  private val hashRelationOverhead = 2.0
+  private val verifyBroadcastHeapShare = 0.5
+  private[graft] val verifyBroadcastSetBytesLimit: Long =
+    (Runtime.getRuntime.maxMemory * verifyBroadcastHeapShare /
+      (2 * hashRelationOverhead)).toLong
 
   /** Exact deserialized payload of a shingle-set table: 8 B per hash
     * plus ~48 B of per-row object/offset overhead. One cheap aggregate
@@ -341,9 +350,9 @@ object Dedup {
     r.getLong(0) * 8L + r.getLong(1) * 48L
   }
 
-  private def verifyPairs(candidates: DataFrame, aSets: DataFrame,
-                          bSets: DataFrame, threshold: Double,
-                          provenSetBytes: Long = -1L): DataFrame = {
+  private[graft] def verifyPairs(candidates: DataFrame, aSets: DataFrame,
+                                 bSets: DataFrame, threshold: Double,
+                                 provenSetBytes: Long = -1L): DataFrame = {
     val bcast = provenSetBytes >= 0 &&
       provenSetBytes <= verifyBroadcastSetBytesLimit
     def side(s: DataFrame) = if (bcast) broadcast(s) else s
@@ -882,14 +891,13 @@ object Dedup {
     // r12 read pattern) and run the dispatch aggregate over the
     // checkpointed rows — sub-second even at sf10's 16M-row bucket
     // table, and the spanning branch then reads exactly what r12 read.
-    // A caller that already persisted its bucket table
-    // (nearDupStateStep) lends its cache instead — never re-checkpoint
-    // or unpersist it (the caller's state outputs still read it).
-    // `materialized` lets a caller vouch for an ALREADY-checkpointed
-    // bucket table (Dataset.storageLevel only sees the CacheManager, so
-    // a localCheckpoint-backed frame reads as NONE and would be copied)
-    val borrowed = materialized ||
-      buckets.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    // A caller that already cached or checkpointed its bucket table
+    // lends it instead — never re-checkpoint or unpersist it (the
+    // caller's state outputs still read it). `materialized` lets a
+    // caller vouch for a cheap projection of a checkpoint
+    // (nearDupStateStep's explode over its band arrays), which no plan
+    // test can see as stored rows
+    val borrowed = materialized || graft.functions.materialized(buckets)
     // Checkpoint lifecycle: localCheckpoint blocks (this one and the
     // pair tables below) have no public eager-release API — they are
     // freed by the ContextCleaner once the backing RDD is GC'd, i.e.
@@ -905,10 +913,11 @@ object Dedup {
       .agg(coalesce(sum((col("g") * (col("g") - 1) / 2).cast("long")), lit(0L)))
       .head().getLong(0)
     if (estFull <= fullFeedPairLimit) {
-      val verified = verifyPairs(selfPairs(b), sets, sets, threshold)
-        .localCheckpoint()
+      // one consumer downstream (the caller's pair table): a lazy plan
+      // over the materialised bucket and set tables, run by the
+      // caller's action
       lastSpanningStats = SpanningStats(0, 0, 0, 0, estFull, dispatchedFull = true)
-      return verified
+      return verifyPairs(selfPairs(b), sets, sets, threshold)
     }
     // Hub per bucket as a WINDOW min over the checkpointed bucket rows
     // (one bucket-keyed exchange + sort) instead of the r13-r19
@@ -979,6 +988,12 @@ object Dedup {
   @volatile private[graft] var lastWitnessStats: WitnessStats =
     WitnessStats(0, 0, 0, 0)
 
+  /** A corpus bucket table's largest bucket and its row count — what
+    * [[witnessDroppedIds]] dispatches on. [[buildNearDupState]] stores
+    * it in the state's `meta`, so a probe reads it instead of
+    * aggregating the stored table on every drop. */
+  case class BucketOccupancy(maxOccupancy: Long, bucketRows: Long)
+
   /** Witness-bounded EXISTENTIAL verification of an increment against a
     * bucketed corpus — the cross-side analog of
     * [[spanningVerifiedPairs]]. The consumer's verdict per increment
@@ -1012,11 +1027,16 @@ object Dedup {
     * subset (exact Jaccard or exact cosine). The corpus table is
     * scanned twice (hub aggregate + residual join) rather than
     * checkpointed — it is corpus-sized and typically parquet-backed
-    * durable state, so a second pushdown scan beats a copy. Returns
-    * the dropped a_ids (one column `a_id`, distinct). */
+    * durable state, so a second pushdown scan beats a copy.
+    * `corpusOccupancy` is the corpus table's [[BucketOccupancy]] when
+    * the caller already knows it (a stored state's meta); without it
+    * one aggregate over `corpusB` computes it. Returns the dropped a_ids
+    * (one column `a_id`, distinct): a lazy plan on the full-feed arm,
+    * a union of checkpoints on the hub arm. */
   private[graft] def witnessDroppedIds(incB: DataFrame, corpusB: DataFrame,
       verify: DataFrame => DataFrame,
-      fullFeedMaxOccupancy: Long = 8L): DataFrame = {
+      fullFeedMaxOccupancy: Long = 8L,
+      corpusOccupancy: Option[BucketOccupancy] = None): DataFrame = {
     // OCCUPANCY DISPATCH. Hub-first's whole advantage is that a doc
     // colliding with a bucket of occupancy g pays 1 verification
     // instead of g — so when the CORPUS buckets are thin (max g small)
@@ -1025,14 +1045,14 @@ object Dedup {
     // (measured: dedup_neardup_incr 1.6 -> 5.2 s at sf0.1, and at sf10
     // the 250-doc corpus state has max occupancy 1 — the distinct
     // cross candidate set IS the hub candidate set there). The
-    // dispatch statistic is corpus-side ONLY: one bucket-count
-    // aggregate over the (typically parquet-backed, corpus-sized)
-    // state table — the big increment side is never aggregated. A
-    // hot-template corpus state (occupancies in the 10³-10⁶ range —
-    // the scenario this feed exists for) routes to the hub path.
-    val occRow = corpusB.groupBy("bucket").agg(count(lit(1)).as("g"))
-      .agg(coalesce(max("g"), lit(0L)), coalesce(sum("g"), lit(0L))).head()
-    val (maxOcc, corpusRows) = (occRow.getLong(0), occRow.getLong(1))
+    // dispatch statistic is corpus-side ONLY: the stored meta's
+    // figures, else one bucket-count aggregate over the (typically
+    // parquet-backed, corpus-sized) state table — the big increment
+    // side is never aggregated. A hot-template corpus state
+    // (occupancies in the 10³-10⁶ range — the scenario this feed
+    // exists for) routes to the hub path.
+    val BucketOccupancy(maxOcc, corpusRows) =
+      corpusOccupancy.getOrElse(bucketOccupancy(corpusB))
     if (maxOcc <= fullFeedMaxOccupancy) {
       lastWitnessStats = WitnessStats(0, 0, 0, 0, maxOcc, dispatchedFull = true)
       val cross = incB.join(corpusB, "bucket")
@@ -1042,8 +1062,8 @@ object Dedup {
     // Broadcast-roulette pins (r17 audit): hubs/bucket tables here are
     // two-long-row relations whose compressed estimate can land under
     // the broadcast threshold while deserializing driver-heap-sized
-    // (the r16 OOM class). The occupancy aggregate above already
-    // counted the corpus state's rows, so the pin dispatches for free:
+    // (the r16 OOM class). The occupancy figures above already count
+    // the corpus state's rows, so the pin dispatches for free:
     // a state table under the arithmetic bound (hubs and corpusB are
     // both <= corpusRows) stays AQE-free — a hot-template-but-small
     // state (the sf0.1 shape) keeps its broadcasts — while a corpus-
@@ -1075,16 +1095,27 @@ object Dedup {
     hubDropped.unionByName(resDropped)
   }
 
+  /** [[BucketOccupancy]] of a bucket table: one bucket-keyed exchange,
+    * and the per-bucket counts fold to (max, sum) in the tasks that
+    * read them, so the driver receives one pair per partition. */
+  private def bucketOccupancy(buckets: DataFrame): BucketOccupancy = {
+    import buckets.sparkSession.implicits._
+    val (maxOcc, rows) = buckets.groupBy("bucket").count()
+      .select("count").as[Long].rdd
+      .aggregate((0L, 0L))((acc, g) => (math.max(acc._1, g), acc._2 + g),
+        (x, y) => (math.max(x._1, y._1), x._2 + y._2))
+    BucketOccupancy(maxOcc, rows)
+  }
+
   /** Full near-dup pipeline: LSH candidates -> exact Jaccard filter.
     * The shingle-set table feeds three consumers — the signature
     * aggregation and both sides of the verify join — whose exchanges
     * differ (partitioned on doc_id vs a_id vs b_id), so Catalyst's
-    * exchange reuse can't dedupe them. persist() runs the CPU-heavy
-    * mapPartitions stage once; the (tiny) verified pair table is then
-    * materialised eagerly via localCheckpoint so the shingle cache can be
-    * unpersisted before returning — nothing leaks into the caller's
-    * session, and at 100 TB the cache lives only for this pipeline and
-    * spills to disk rather than evicting neighbours.
+    * exchange reuse can't dedupe them. One localCheckpoint runs the
+    * CPU-heavy mapPartitions stage once; the returned pair table is a
+    * lazy plan over it that the caller's action runs, and the
+    * checkpoint's blocks are freed by the ContextCleaner once that plan
+    * is dropped — nothing is registered in the caller's CacheManager.
     *
     * `spanning = false` (default) emits and verifies EVERY in-bucket
     * pair — the report form whose output is the complete verified pair
@@ -1106,40 +1137,32 @@ object Dedup {
                       spanning: Boolean = false,
                       maxPairsPerBucket: Int = 0,
                       provenRows: Long = graft.functions.autoRows): DataFrame = {
-    val sets = shingleHashSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verified =
-      if (spanning) spanningVerifiedPairs(bandBuckets(sets, k, bands), sets, threshold, bands)
-      else {
-        // report form: exactly-once first-band emission — no global
-        // DISTINCT over the re-found pairs ([[firstBandPairs]]); the
-        // capped form runs the SAME gate over the per-bucket member
-        // sample ([[firstBandPairsCapped]]) — a governed run must never
-        // cost more than the ungoverned one it protects (the r18
-        // inversion: 25.9 s capped vs 16.4 s full at sf10).
-        // Dispatch count from DOCS (lazily resolved: caller-provided
-        // or bare-relation count-star, r17 ADVICE), NOT from the
-        // persisted sets: counting sets forces the columnar cache
-        // build in its own pass plus an extra decompression read for
-        // the banding consumer — measured +15 s on sf10 dedup_jaccard
-        // when this briefly used sets.count(). The row counts are
-        // identical (one set row per doc).
-        val dr = graft.functions.resolveRows(docs, provenRows)
-        val sideRows = if (dr < 0) -1L else dr * bands
-        val cand =
-          if (maxPairsPerBucket > 0)
-            firstBandPairsCapped(bandBucketArrays(sets, k, bands),
-              maxPairsPerBucket, bands, sideRows)
-          else
-            firstBandPairs(bandBucketArrays(sets, k, bands),
-              sideRows = sideRows, bands = bands, materializeArrays = true)
-        // measured payload drives the verify join's broadcast-vs-merge
-        // dispatch (this aggregate is also what fills the sets cache)
-        verifyPairs(cand, sets, sets, threshold,
-          provenSetBytes = setPayloadBytes(sets)).localCheckpoint()
-      }
-    sets.unpersist(false)
-    verified
+    val sets = shingleHashSets(docs).localCheckpoint()
+    if (spanning) spanningVerifiedPairs(bandBuckets(sets, k, bands), sets, threshold, bands)
+    else {
+      // report form: exactly-once first-band emission — no global
+      // DISTINCT over the re-found pairs ([[firstBandPairs]]); the
+      // capped form runs the SAME gate over the per-bucket member
+      // sample ([[firstBandPairsCapped]]) — a governed run must never
+      // cost more than the ungoverned one it protects (the r18
+      // inversion: 25.9 s capped vs 16.4 s full at sf10).
+      // Dispatch count from DOCS (lazily resolved: caller-provided
+      // or bare-relation count-star, r17 ADVICE), which reads no
+      // column. The row counts are identical (one set row per doc).
+      val dr = graft.functions.resolveRows(docs, provenRows)
+      val sideRows = if (dr < 0) -1L else dr * bands
+      val cand =
+        if (maxPairsPerBucket > 0)
+          firstBandPairsCapped(bandBucketArrays(sets, k, bands),
+            maxPairsPerBucket, bands, sideRows)
+        else
+          firstBandPairs(bandBucketArrays(sets, k, bands),
+            sideRows = sideRows, bands = bands, materializeArrays = true)
+      // measured payload drives the verify join's broadcast-vs-merge
+      // dispatch
+      verifyPairs(cand, sets, sets, threshold,
+        provenSetBytes = setPayloadBytes(sets))
+    }
   }
 
   /** The deduplicated corpus: drop every doc that near-duplicates a
@@ -1537,25 +1560,22 @@ object Dedup {
   def nearDupIncrement(existing: DataFrame, incoming: DataFrame,
                        threshold: Double = 0.8, k: Int = 128,
                        bands: Int = 32): DataFrame = {
-    // one persisted shingle pass for the existing side feeds its bucket
-    // table AND the verify join; the increment side is shingled inside
-    // nearDupStateStep — the SAME core the streaming ingest runs, so
-    // batch and streaming agree exactly on what counts as a duplicate
-    val setsEx = shingleHashSets(existing)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the witness-bounded step reads the corpus bucket table twice
-    // (hub aggregate + residual join) — persist it so the signature
-    // aggregation runs once, like a stored state table would be
-    val bEx = bandBuckets(setsEx, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one checkpointed shingle pass for the existing side feeds its
+    // bucket table AND the verify join; the increment side is shingled
+    // inside nearDupStateStep — the SAME core the streaming ingest
+    // runs, so batch and streaming agree exactly on what counts as a
+    // duplicate
+    val setsEx = shingleHashSets(existing).localCheckpoint()
+    // the witness-bounded step reads the corpus bucket table at least
+    // twice (occupancy aggregate + candidate join) — checkpoint it so
+    // the signature pass runs once, like a stored state table would be
+    val bEx = bandBuckets(setsEx, k, bands).localCheckpoint()
     // batch form discards the state outputs — don't materialise them.
-    // The returned survivors plan reads only incoming + the step's
-    // eagerly-checkpointed dropped set, so releasing the caches is safe.
+    // The returned survivors plan still reads both checkpoints; their
+    // blocks are freed by the ContextCleaner once the caller drops it.
     val (survivors, _, _) =
       nearDupStateStep(setsEx, bEx, incoming,
         threshold, k, bands, materializeState = false)
-    setsEx.unpersist(false)
-    bEx.unpersist(false)
     survivors
   }
 
@@ -1575,24 +1595,25 @@ object Dedup {
     * candidate-only shingle-set lookup.
     *
     * Returns (survivors, survivorSets, survivorBuckets); the caller
-    * appends the last two to the durable state. With
-    * `materializeState=true` (the streaming ingest) all three are
-    * eagerly materialised (localCheckpoint) so the increment's shingle
-    * pass has already run exactly once when this returns. Batch callers
-    * that only consume the survivors pass `materializeState=false`:
-    * the dropped-id set is still checkpointed (it is what the survivors
-    * anti-join against, and it cuts the shingle lineage), but the two
-    * state outputs stay lazy plans — a caller that discards them pays
-    * nothing, instead of two extra anti-join jobs per increment. A
-    * caller that DOES evaluate them under `materializeState=false`
-    * recomputes the increment's shingle pass once per output. */
+    * appends the last two to the durable state. The increment's shingle
+    * sets and band arrays are checkpointed once on entry, so its
+    * shingle pass runs exactly once either way. With
+    * `materializeState=true` (the streaming ingest) the dropped-id set,
+    * which all three outputs anti-join against, is checkpointed and the
+    * three outputs are eagerly materialised too. Batch callers that only
+    * consume the survivors pass `materializeState=false`: nothing past
+    * the two input checkpoints is materialised, and the survivors come
+    * back as ONE lazy plan (verify, dropped-id union, anti join) that
+    * the caller's action runs. A caller that evaluates the two state
+    * outputs under `materializeState=false` re-runs that verify plan
+    * once per output. */
   def nearDupStateStep(existingSets: DataFrame, existingBuckets: DataFrame,
                        incoming: DataFrame, threshold: Double = 0.8,
                        k: Int = 128, bands: Int = 32,
-                       materializeState: Boolean = true)
+                       materializeState: Boolean = true,
+                       corpusOccupancy: Option[BucketOccupancy] = None)
       : (DataFrame, DataFrame, DataFrame) = {
-    val setsIn = shingleHashSets(incoming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val setsIn = shingleHashSets(incoming).localCheckpoint()
     // row-level eager checkpoint, not columnar persist: the bucket table
     // is read by FOUR bucket-keyed consumers (witness hub join, witness
     // residual join, spanning hub window, spanning residual join) and
@@ -1616,7 +1637,8 @@ object Dedup {
     val crossDropped = witnessDroppedIds(
       bIn.select(col("id").as("a_id"), col("bucket")),
       existingBuckets.select(col("id").as("b_id"), col("bucket")),
-      cand => verifyPairs(cand, setsIn, existingSets, threshold))
+      cand => verifyPairs(cand, setsIn, existingSets, threshold),
+      corpusOccupancy = corpusOccupancy)
     // in-batch self-dedup drops the GREATER id of each verified pair —
     // exactly [[dropNearDups]]'s loser set, so the spanning feed's
     // loser-set equality proof applies verbatim and the in-batch side
@@ -1629,28 +1651,15 @@ object Dedup {
     val selfDropped = spanningVerifiedPairs(bIn, setsIn, threshold, bands,
         materialized = true)
       .select(col("b_id").as("doc_id"))
-    val dropped = crossDropped.select(col("a_id").as("doc_id"))
+    // checkpoints here are freed by the ContextCleaner once the returned
+    // plans are dropped (the lifecycle at [[spanningVerifiedPairs]])
+    def materialize(df: DataFrame) = if (materializeState) df.localCheckpoint() else df
+    val dropped = materialize(crossDropped.select(col("a_id").as("doc_id"))
       .unionByName(selfDropped)
-      .distinct()
-      .localCheckpoint()
-    // survivors depend only on incoming + the checkpointed dropped set,
-    // so they stay correct after the shingle caches are released either way
-    val survivorsLazy = incoming.join(dropped, Seq("doc_id"), "left_anti")
-    val survivors =
-      if (materializeState) survivorsLazy.localCheckpoint() else survivorsLazy
-    val survivorSets = {
-      val s = setsIn.join(dropped, Seq("doc_id"), "left_anti")
-      if (materializeState) s.localCheckpoint() else s
-    }
-    val survivorBuckets = {
-      val b = bIn.join(dropped, bIn("id") === dropped("doc_id"), "left_anti")
-      if (materializeState) b.localCheckpoint() else b
-    }
-    setsIn.unpersist(false)
-    // bIn is a localCheckpoint now — its blocks are reclaimed by the
-    // ContextCleaner when the backing RDD is GC'd (the documented
-    // checkpoint lifecycle above), not by an explicit unpersist
-    (survivors, survivorSets, survivorBuckets)
+      .distinct())
+    (materialize(incoming.join(dropped, Seq("doc_id"), "left_anti")),
+      materialize(setsIn.join(dropped, Seq("doc_id"), "left_anti")),
+      materialize(bIn.join(dropped.select(col("doc_id").as("id")), Seq("id"), "left_anti")))
   }
 
   /** Two-sided exact-cosine verification of candidate (a_id, b_id)
@@ -2139,17 +2148,18 @@ object Dedup {
     *
     * Returns (survivors, survivorVecs, survivorCells); a stateful
     * caller appends the last two to its durable state. Same
-    * `materializeState` contract as [[nearDupStateStep]]: the dropped
-    * set is always checkpointed (it is what survivors anti-join
-    * against), state outputs are checkpointed only when requested —
-    * a batch caller that discards them pays nothing. */
+    * `materializeState` contract as [[nearDupStateStep]]: the prepared
+    * increment and its cell assignments are checkpointed once on
+    * entry; the dropped set and the three outputs are checkpointed only
+    * when requested, so a batch caller gets the survivors as one lazy
+    * plan that its action runs and pays nothing for the discarded
+    * state outputs. */
   def embeddingStateStep(existingVecs: DataFrame, existingCells: DataFrame,
                          centroids: Seq[Array[Double]], incoming: DataFrame,
                          threshold: Double = 0.45, assign: Int = 2,
                          materializeState: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
-    val inc = Similarity.prepared(incoming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inc = Similarity.prepared(incoming).localCheckpoint()
     val incCells = Similarity.cellAssignments(inc, centroids, assign)
       .localCheckpoint()
     // MEASURED NEGATIVE: the text side's witness-bounded hub-first
@@ -2171,26 +2181,14 @@ object Dedup {
       .join(existingCells.as("e"), col("i.cell") === col("e.cell"))
       .select(col("i.vec_id").as("a_id"), col("e.vec_id").as("b_id"))
       .distinct()
-    val dropped = verifyCosine(candCross, inc, existingVecs, threshold)
+    def materialize(df: DataFrame) = if (materializeState) df.localCheckpoint() else df
+    val dropped = materialize(verifyCosine(candCross, inc, existingVecs, threshold)
       .select(col("a_id").as("vec_id"))
       .unionByName(embeddingSelfDroppedIds(incCells, inc, threshold))
-      .distinct()
-      .localCheckpoint()
-    // survivors depend only on incoming + the checkpointed dropped set,
-    // so they stay correct after the vector cache is released either way
-    val survivorsLazy = incoming.join(dropped, Seq("vec_id"), "left_anti")
-    val survivors =
-      if (materializeState) survivorsLazy.localCheckpoint() else survivorsLazy
-    val survivorVecs = {
-      val v = inc.join(dropped, Seq("vec_id"), "left_anti")
-      if (materializeState) v.localCheckpoint() else v
-    }
-    val survivorCells = {
-      val c = incCells.join(dropped, Seq("vec_id"), "left_anti")
-      if (materializeState) c.localCheckpoint() else c
-    }
-    inc.unpersist(false)
-    (survivors, survivorVecs, survivorCells)
+      .distinct())
+    (materialize(incoming.join(dropped, Seq("vec_id"), "left_anti")),
+      materialize(inc.join(dropped, Seq("vec_id"), "left_anti")),
+      materialize(incCells.join(dropped, Seq("vec_id"), "left_anti")))
   }
 
   /** Incremental embedding-cosine dedup — the daily-drop form of
@@ -2216,18 +2214,18 @@ object Dedup {
   def embeddingIncrement(existing: DataFrame, incoming: DataFrame,
                          threshold: Double = 0.45, centroidsK: Int = 0,
                          assign: Int = 2): DataFrame = {
-    val ex = Similarity.prepared(existing)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ex = Similarity.prepared(existing).localCheckpoint()
     // training persists (and releases) its own copy of the union for
     // the Lloyd loop and sizes the cells from it (centroidsK = 0); the
     // increment side re-prepares inside the step
     val union = ex.unionByName(Similarity.prepared(incoming))
     val centroids = Similarity.trainIvfCentroids(union, centroidsK)
     val exCells = Similarity.cellAssignments(ex, centroids, assign)
-    // batch form discards the state outputs — don't materialise them
+    // batch form discards the state outputs — don't materialise them.
+    // The survivors plan reads the ex checkpoint; its blocks are freed
+    // by the ContextCleaner once the caller drops that plan.
     val (survivors, _, _) = embeddingStateStep(ex, exCells, centroids,
       incoming, threshold, assign, materializeState = false)
-    ex.unpersist(false)
     survivors
   }
 
@@ -2313,7 +2311,12 @@ object Dedup {
     * `band_buckets` ((id, bucket)) tables [[nearDupStateStep]] probes,
     * plus `meta` — written LAST as the completeness marker — pinning
     * (k, bands, n_docs) so a probe can never band with a different
-    * signature layout than the corpus was indexed with. This is the
+    * signature layout than the corpus was indexed with, and carrying
+    * the bucket table's [[BucketOccupancy]] (`max_occupancy`,
+    * `bucket_rows`, one aggregate over the written table) so a probe
+    * dispatches its witness feed without scanning it. The set table's
+    * id column is stored as `doc_id` whatever `idCol` is: that is the
+    * column the probe reads. This is the
     * TEXT analog of [[buildEmbeddingDedupState]], and the batch-built
     * form of the state the streaming ingest sink accumulates: one
     * corpus shingle pass at build time, then every daily increment
@@ -2328,15 +2331,35 @@ object Dedup {
     val mfs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (mfs.exists(metaPath)) mfs.delete(metaPath, true)
     val sets = shingleHashSets(docs, idCol = idCol, textCol = textCol)
+      .withColumnRenamed(idCol, "doc_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.write.mode("overwrite").parquet(s"$dir/shingle_sets")
-    bandBuckets(sets, k, bands, idCol)
+    // the doc count rides the set table's write
+    val written = org.apache.spark.sql.Observation()
+    sets.observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$dir/shingle_sets")
+    bandBuckets(sets, k, bands)
       .write.mode("overwrite").parquet(s"$dir/band_buckets")
-    val n = sets.count()
     sets.unpersist(false)
-    Seq((k, bands, n)).toDF("k", "bands", "n_docs")
+    val n = written.get("n").asInstanceOf[Long]
+    // one aggregate over the written table, reading only its bucket column
+    val occ = bucketOccupancy(
+      spark.read.schema(storedBucketsSchema).parquet(s"$dir/band_buckets"))
+    Seq((k, bands, n, occ.maxOccupancy, occ.bucketRows))
+      .toDF("k", "bands", "n_docs", "max_occupancy", "bucket_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
+
+  // The schemas [[buildNearDupState]] writes, so a probe reads the
+  // state without a schema-inference job. A meta written before the
+  // occupancy columns existed reads them as null.
+  private val storedSetsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("shash", ArrayType(LongType))))
+  private val storedBucketsSchema = StructType(Seq(
+    StructField("id", LongType), StructField("bucket", IntegerType)))
+  private val storedMetaSchema = StructType(Seq(
+    StructField("k", IntegerType), StructField("bands", IntegerType),
+    StructField("n_docs", LongType), StructField("max_occupancy", LongType),
+    StructField("bucket_rows", LongType)))
 
   /** Build and PERSIST the near-dup CLOSURE state — the stored-model
     * form of [[nearDupClusters]], i.e. the train-once/probe-forever
@@ -2397,19 +2420,25 @@ object Dedup {
     * and only candidates' shingle sets are fetched for the exact
     * Jaccard verify. Per-run cost tracks the increment and its bucket
     * collisions; the corpus contributes two parquet-streamed joins and
-    * zero recomputation. Same duplicate contract as
-    * [[nearDupIncrement]] (shared [[nearDupStateStep]] core), so the
-    * all-pairs oracle transfers. */
+    * zero recomputation. The stored tables are read with the schemas
+    * [[buildNearDupState]] wrote, and the witness dispatch takes the
+    * stored occupancy from `meta` (a meta that predates it falls back
+    * to the aggregate), so the corpus side costs one build-time job:
+    * the `meta` read. Same
+    * duplicate contract as [[nearDupIncrement]] (shared
+    * [[nearDupStateStep]] core), so the all-pairs oracle transfers. */
   def nearDupIncrementStored(incoming: DataFrame, dir: String,
                              threshold: Double = 0.8): DataFrame = {
     val spark = incoming.sparkSession
-    import spark.implicits._
-    val (k, bands) = spark.read.parquet(s"$dir/meta")
-      .select("k", "bands").as[(Int, Int)].head()
+    val meta = spark.read.schema(storedMetaSchema).parquet(s"$dir/meta").head()
+    val occupancy =
+      if (meta.isNullAt(3) || meta.isNullAt(4)) None
+      else Some(BucketOccupancy(meta.getLong(3), meta.getLong(4)))
     val (survivors, _, _) = nearDupStateStep(
-      spark.read.parquet(s"$dir/shingle_sets"),
-      spark.read.parquet(s"$dir/band_buckets"),
-      incoming, threshold, k, bands, materializeState = false)
+      spark.read.schema(storedSetsSchema).parquet(s"$dir/shingle_sets"),
+      spark.read.schema(storedBucketsSchema).parquet(s"$dir/band_buckets"),
+      incoming, threshold, meta.getInt(0), meta.getInt(1),
+      materializeState = false, corpusOccupancy = occupancy)
     survivors
   }
 

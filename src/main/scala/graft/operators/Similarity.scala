@@ -297,10 +297,9 @@ object Similarity {
     import e.sparkSession.implicits._
     // Every pass reads e, so cache it for the loop's lifetime (at 100 TB:
     // never re-read the corpus per iteration). Respect a caller's own
-    // cache: persisting is conditional so the finally-unpersist can
-    // never evict state the caller still needs.
-    val callerCached =
-      e.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    // cache or checkpoint: persisting is conditional so the
+    // finally-unpersist can never evict state the caller still needs.
+    val callerCached = graft.functions.materialized(e)
     val cached =
       if (callerCached) e
       else e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -568,20 +567,20 @@ object Similarity {
   }
 
   /** A trained IVF-PQ model: coarse centroid matrix, per-subspace
-    * codebooks, the encoded codes table, and the residual table that is
-    * STILL PERSISTED — callers unpersist it after the consumers of
-    * `codes` have materialised. */
+    * codebooks, and the encoded codes table — a lazy plan over the
+    * checkpointed residuals, whose blocks the ContextCleaner frees once
+    * no plan reads them. */
   private[graft] case class IvfPqModel(centroids: Array[Array[Double]],
                                 codebooks: Array[Array[Array[Double]]],
-                                codes: DataFrame, residuals: DataFrame)
+                                codes: DataFrame)
 
   /** Shared IVF-PQ training: coarse centroids (cached Lloyd), residuals
-    * r = v - centroid(cell) computed ONCE and cached for PQ training +
-    * encoding, deterministic xxhash64-sampled codebook seeds, and the
-    * corpus encoded to (vec_id, centroid_id, codes[m], norm). One
-    * implementation feeds both the in-flight search ([[knnIvfPq]]) and
-    * the stored index ([[buildIvfPqIndex]]), so their codes can never
-    * diverge. */
+    * r = v - centroid(cell) computed ONCE and checkpointed for PQ
+    * training + encoding, deterministic xxhash64-sampled codebook
+    * seeds, and the corpus encoded to (vec_id, centroid_id, codes[m],
+    * norm). One implementation feeds both the in-flight search
+    * ([[knnIvfPq]]) and the stored index ([[buildIvfPqIndex]]), so
+    * their codes can never diverge. */
   private[graft] def trainIvfPq(e: DataFrame, centroidsK: Int, m: Int,
                          kSub: Int): IvfPqModel = {
     val spark = e.sparkSession
@@ -603,7 +602,9 @@ object Similarity {
         (id, cid, r, norm)
       }
       .toDF("vec_id", "centroid_id", "r", "norm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // lazy: the plan has no exchange, so nothing runs here, and the
+      // seed pass below fills the checkpoint that every later pass reads
+      .localCheckpoint(eager = false)
     // deterministic seeds: kSub pseudo-random residual rows, sliced per
     // subspace (same xxhash64 trick as the IVF init — no RNG); the seed
     // pass and every codebook round share this one RDD
@@ -623,7 +624,7 @@ object Similarity {
         (id, cid, Array.tabulate(m)(i => nearestSub(r, i * subDim, bcCb.value(i), subDim)), norm)
       }
       .toDF("vec_id", "centroid_id", "codes", "norm")
-    IvfPqModel(centArr, cb, codes, residuals)
+    IvfPqModel(centArr, cb, codes)
   }
 
   /** IVF-PQ ANN top-k: IVF coarse cells bound the candidate set
@@ -644,27 +645,23 @@ object Similarity {
   def knnIvfPq(emb: DataFrame, isQuery: Column, k: Int = 10,
                centroidsK: Int = 0, nprobe: Int = 4, m: Int = 8,
                kSub: Int = 16, refine: Int = 5): DataFrame = {
-    // one cache of the parsed vectors feeds training, residuals, and
-    // the probe pass; the final re-rank job re-derives e from source
-    val e = prepared(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one checkpoint of the parsed vectors feeds training, residuals,
+    // the probe pass and the re-rank; the returned search is a lazy
+    // plan over it and the residual checkpoint
+    val e = prepared(emb).localCheckpoint()
     val model = trainIvfPq(e, centroidsK, m, kSub)
-    // cands materialise inside pqSearch, so both caches can be released
-    // as soon as it returns
-    val out = pqSearch(e, model.codes, model.centroids, model.codebooks,
+    pqSearch(e, model.codes, model.centroids, model.codebooks,
       isQuery, k, nprobe, refine)
-    model.residuals.unpersist(false)
-    e.unpersist(false)
-    out
   }
 
   /** IVF-PQ search phase against an already-built codes table: probe
     * nprobe cells per query, LUT-score the codes, exact-re-rank the
     * refine budget. Shared by [[knnIvfPq]] (codes built in-flight) and
     * [[searchIvfPqIndex]] (codes loaded from a stored index); the vector
-    * dimension is read from the centroid matrix. The
-    * candidate top-`refine*k` is eagerly materialised (localCheckpoint)
-    * so callers may release whatever cache fed `codes`. */
+    * dimension is read from the centroid matrix. Returns a lazy plan:
+    * the candidate top-`refine*k` has one consumer (the re-rank), so
+    * it is not materialised, and the caller keeps whatever feeds `e`
+    * and `codes` readable until the plan runs. */
   private def pqSearch(e: DataFrame, codes: DataFrame,
                        centArr: Array[Array[Double]],
                        cb: Array[Array[Array[Double]]], isQuery: Column,
@@ -712,7 +709,6 @@ object Similarity {
     val cands = scored.withColumn("__ar", row_number().over(wA))
       .where(col("__ar") <= k * refine)
       .select("q_id", "vec_id")
-      .localCheckpoint()
     // exact re-rank of the refine budget: true vectors join back only
     // for the ~refine*k survivors per query
     val rescored = cands
@@ -745,7 +741,6 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val model = trainIvfPq(e, centroidsK, m, kSub)
     model.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    model.residuals.unpersist(false)
     e.unpersist(false)
     model.centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF("centroid_id", "v")

@@ -24,8 +24,11 @@ import graft.sources.Ingestor
   *   "transformation": [ { "type": "config", "config": {...} },
   *                       { "type": "sql", "query": "SELECT ... FROM input_data" } ],
   *   "persistence":    { "path": "...", "strategy": "append"|"insert"|"replace"|"upsert",
-  *                       "keys": [...] } }
+  *                       "keys": [...], "partition_by": [...] } }
   * }}}
+  *
+  * `partition_by` lays the target out hive-style on those columns, so
+  * an upsert rewrites only the partitions its delta touches.
   */
 object Pipeline {
 
@@ -239,7 +242,11 @@ object Pipeline {
               graft.sinks.JdbcWriter.write(transformed, url, table, strategy)
             case _ =>
               val JString(outPath) = (p \ "path"): @unchecked
-              BatchWriter.write(transformed, outPath, strategy)
+              val partitionCols = p \ "partition_by" match {
+                case JArray(cs) => cs.collect { case JString(c) => c }
+                case _          => Nil
+              }
+              BatchWriter.write(transformed, outPath, strategy, partitionCols)
           }
           (s, s.rowsWritten)
         }

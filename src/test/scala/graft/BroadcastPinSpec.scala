@@ -149,4 +149,34 @@ class BroadcastPinSpec extends SparkSpec {
         s"a bucket-keyed broadcast build exceeded the proven-free row bound: $oversized")
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("verify dispatch: the set-bytes limit comes from the heap; above it the verify plans sort-merge") {
+    // two builds alive at once, each ~2x its payload as a hashed
+    // relation, within half the heap
+    val limit = Dedup.verifyBroadcastSetBytesLimit
+    assert(limit == Runtime.getRuntime.maxMemory / 8)
+    val sets = Seq((1L, Seq(1L, 2L, 3L)), (2L, Seq(1L, 2L, 4L)), (3L, Seq(7L)))
+      .toDF("doc_id", "shash")
+    val cand = Seq((1L, 2L), (1L, 3L)).toDF("a_id", "b_id")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    // with size-based broadcasting off, only verifyPairs' own hint can
+    // broadcast, so the plan shows the dispatch alone
+    spark.conf.set(key, "-1")
+    try {
+      def planned(bytes: Long) = {
+        val v = Dedup.verifyPairs(cand, sets, sets, 0.5, provenSetBytes = bytes)
+        assert(v.select("a_id", "b_id").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+        executedNodes(v.queryExecution.executedPlan)
+      }
+      val at = planned(limit)
+      assert(bhj(at).size == 2 && smj(at).isEmpty, "at the limit both set sides broadcast")
+      val above = planned(limit + 1)
+      assert(bhj(above).isEmpty && smj(above).size == 2,
+        "above the limit the verify must plan sort-merge")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

@@ -1526,11 +1526,32 @@ class DedupSimilaritySpec extends SparkSpec {
       .select("k", "bands", "n_docs").as[(Int, Int, Long)].head()
       == ((128, 32, corpus.count())))
     assert(spark.read.parquet(s"$dir/shingle_sets").count() == corpus.count())
+    // meta also carries the bucket table's occupancy, so the probe's
+    // witness dispatch reads it instead of aggregating band_buckets
+    val occ = spark.read.parquet(s"$dir/band_buckets")
+      .groupBy("bucket").agg(count(lit(1)).as("g"))
+      .agg(max("g"), sum("g")).as[(Long, Long)].head()
+    assert(spark.read.parquet(s"$dir/meta")
+      .select("max_occupancy", "bucket_rows").as[(Long, Long)].head() == occ)
     val probed = Dedup.nearDupIncrementStored(inc, dir)
       .select("doc_id").as[Long].collect().sorted.toSeq
+    val probedStats = Dedup.lastWitnessStats
+    assert(probedStats.corpusMaxOccupancy == occ._1)
     val inflight = Dedup.nearDupIncrement(corpus, inc)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(probed.nonEmpty && probed == inflight)
+    // a state whose meta predates the occupancy columns still probes to
+    // the same survivors, dispatching on the aggregate instead
+    val oldDir = java.nio.file.Files.createTempDirectory("graft_neardup_state_v0").toString
+    Seq("shingle_sets", "band_buckets").foreach { t =>
+      spark.read.parquet(s"$dir/$t").write.parquet(s"$oldDir/$t")
+    }
+    spark.read.parquet(s"$dir/meta").select("k", "bands", "n_docs")
+      .write.parquet(s"$oldDir/meta")
+    val probedOld = Dedup.nearDupIncrementStored(inc, oldDir)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(probedOld == probed)
+    assert(Dedup.lastWitnessStats == probedStats)
   }
 
   test("stored closure state: persisted labels byte-identical to the fresh closure, meta-pinned") {

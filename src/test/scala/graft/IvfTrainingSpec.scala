@@ -126,7 +126,6 @@ class IvfTrainingSpec extends SparkSpec {
         (id, c, (0 until m).map(i => nearestCode(r, i * subDim, want(i))))
       }.toSet
       assert(gotCodes == wantCodes)
-      model.residuals.unpersist(false)
     } finally e.unpersist(false)
   }
 
@@ -184,7 +183,7 @@ class IvfTrainingSpec extends SparkSpec {
       }
       // IVF-PQ: coarse count + seeds + 3 rounds, then PQ seeds + 3 rounds
       val (jobs, shuffled) = jobsAndShuffleBytes {
-        Similarity.trainIvfPq(e, 0, 4, 8).residuals.unpersist(false)
+        Similarity.trainIvfPq(e, 0, 4, 8)
       }
       assert(jobs <= 9 && shuffled == 0L, s"IVF-PQ: $jobs jobs, $shuffled bytes")
     } finally e.unpersist(false)

@@ -254,6 +254,34 @@ class PersistenceSpec extends SparkSpec {
     assert(r2.skippedIdempotent)
   }
 
+  test("pipeline spec: persistence.partition_by makes an upsert rewrite only the touched partition") {
+    val dir = Files.createTempDirectory("graft_part_spec").toString
+    val out = s"$dir/out"
+    def spec(src: String) =
+      s"""{"ingestion": {"path": "$src"},
+         | "persistence": {"path": "$out", "strategy": "upsert", "keys": ["k"],
+         |   "partition_by": ["mo"]}}""".stripMargin
+    Seq((1L, "a", "2024-01"), (2L, "b", "2024-01"), (3L, "c", "2024-02"))
+      .toDF("k", "name", "mo").write.parquet(s"$dir/day1")
+    Pipeline.runJson(spark, spec(s"$dir/day1"))
+    assert(new java.io.File(s"$out/mo=2024-01").isDirectory)
+    def files(part: String) = new java.io.File(s"$out/mo=$part").listFiles()
+      .map(f => (f.getName, f.lastModified())).toSet
+    val untouched = files("2024-02")
+
+    // day 2 updates k=2 only: one row, one partition
+    Seq((2L, "b2", "2024-01")).toDF("k", "name", "mo").write.parquet(s"$dir/day2")
+    val r = Pipeline.runJson(spark, spec(s"$dir/day2"))
+    val ws = r.writeStats.get
+    assert(ws.rowsUpdated == 1 && ws.rowsInserted == 0)
+    // only 2024-01 was merged and written: its 2 rows, not the table's 3
+    assert(ws.rowsWritten == 2)
+    assert(files("2024-02") == untouched, "an untouched partition was rewritten")
+    val rows = spark.read.parquet(out).select("k", "name", "mo")
+      .orderBy("k").as[(Long, String, String)].collect().toSeq
+    assert(rows == Seq((1L, "a", "2024-01"), (2L, "b2", "2024-01"), (3L, "c", "2024-02")))
+  }
+
   test("pipeline: a failed run releases its idempotency claim, so the retry runs") {
     val dir = Files.createTempDirectory("graft_retry").toString
     val src = s"$dir/src.parquet"
