@@ -455,11 +455,11 @@ object Contamination {
     * .embeddingIncrement): IVF cells trained on the union (cell count
     * scales with the larger side), corpus and benchmark each assigned
     * to `assign` nearest cells, candidates from SHARED cells only —
-    * never corpus × benchmark all-pairs — then exact-cosine verified
-    * with the codegen'd dot product. The benchmark side is eval-suite
-    * sized, so its cell table broadcasts; the corpus-sized work is one
-    * assignment pass + one cell equi-join. Both prepared sides and
-    * their cell assignments are checkpointed; the verify, the per-row
+    * never corpus × benchmark all-pairs — each shared cell scored
+    * in-task, corpus blocks against benchmark blocks
+    * (Dedup.cellCrossVerifiedPairs). The corpus-sized work is one
+    * assignment pass and one cell-keyed layout. Both prepared sides are
+    * checkpointed; the assignment, the block-tiled verify, the per-row
     * aggregate and the report join stay one lazy plan that the
     * caller's action runs. */
   def flagSemanticOverlap(corpus: DataFrame, benchmark: DataFrame,
@@ -469,22 +469,16 @@ object Contamination {
     val b = Similarity.prepared(benchmark).localCheckpoint()
     // centroidsK = 0 sizes the cells from the training pass's own count
     val centroids = Similarity.trainIvfCentroids(c.unionByName(b), centroidsK)
-    // r20: per-cell cross scan kernel (guide §2.4/§3.3) — the former
-    // cell-join candidate relation was DISTINCTed and then shipped both
-    // vectors through a two-sided pair join; the kernel scores every
-    // (corpus, benchmark) cell-mate pair in-task and only the VERIFIED
-    // rows reach a shuffle. distinct-before-count is preserved (the
-    // kernel emits once per shared cell; cosine is deterministic, so
-    // distinct on (a_id, b_id, cosine) == the old candidate distinct).
-    // assignments checkpointed: the kernel's occupancy/dispatch
-    // aggregate and each join arm otherwise re-run the centroid-dot
-    // assignment pass per consumer (the tables are (vec_id, cell) ×
-    // assign rows — tiny)
+    // block-tiled cross kernel: every (corpus, benchmark) cell-mate
+    // pair is scored in-task, A blocks against B blocks, and only the
+    // VERIFIED rows reach a shuffle; its distinct reports a pair shared
+    // by several cells once, so n_benchmark_matches counts vectors.
+    // The kernel reads each assignment table once, so the assignment
+    // pass runs inside the caller's action, off the checkpointed sides.
     val matches = graft.operators.Dedup.cellCrossVerifiedPairs(
-        Similarity.cellAssignments(c, centroids, assign).localCheckpoint(),
-        Similarity.cellAssignments(b, centroids, assign).localCheckpoint(),
+        Similarity.cellAssignments(c, centroids, assign),
+        Similarity.cellAssignments(b, centroids, assign),
         c, b, threshold)
-      .distinct()
       .groupBy(col("a_id").as("vec_id"))
       .agg(count(lit(1)).as("n_benchmark_matches"),
         max(col("cosine")).as("max_cos"))

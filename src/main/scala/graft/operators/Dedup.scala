@@ -1308,12 +1308,11 @@ object Dedup {
         lastCellPairEmissionStats = st
         kept
       } else cells
-    // r20: per-cell scan kernel (guide §2.4/§3.3 — the r14 relational
-    // feed materialised + DISTINCTed 45.6M candidate rows, then
-    // shipped both vectors into a two-sided join, 38.2 s of
-    // dedup_embedding_lsh's 40.5 s at sf10; the kernel ships each
-    // vector once per assigned cell and the only pair-sized shuffle
-    // left is the verified-report distinct)
+    // block-tiled cell kernel (the r14 relational feed materialised +
+    // DISTINCTed 45.6M candidate rows, then shipped both vectors into a
+    // two-sided join, 38.2 s of dedup_embedding_lsh's 40.5 s at sf10;
+    // the kernel ships each vector once per partner block and the only
+    // pair-sized shuffle left is the verified-report distinct)
     cellVerifiedPairs(members, e, threshold)
   }
 
@@ -1389,9 +1388,12 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
                           idCol: String = "doc_id",
                           maxRounds: Int = 20): DataFrame = {
+    // both directions from ONE pass over `pairs`: a lazy pair plan runs once
     val edges = pairs
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+      .select(explode(array(
+        struct(col("a_id").as("src"), col("b_id").as("dst")),
+        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val paired = edges.select(col("src").as("id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1705,207 +1707,166 @@ object Dedup {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
   }
 
-  /** VERIFIED in-cell pair REPORT as a per-cell scan — the pair-emitting
-    * sibling of [[embeddingSelfDroppedIds]] (same member join, same
-    * single (cell → members) exchange, same mega-cell guard), for
-    * consumers whose output IS the verified (a_id, b_id, cosine) set.
-    * The r14 relational feed this replaces materialised and DISTINCTed
-    * the full C(g,2) candidate relation, then shuffled BOTH vectors
-    * into a two-sided pair join — at sf10 the 45.6M-candidate
-    * distinct+join was 38.2 s of dedup_embedding_lsh's 40.5 s where
-    * the in-task dots are ~3 G multiply-adds. Per-pair decisions and
-    * values are the exact scalar twin of the relational verify
-    * ([[roundedCosine]] — NaN emitted, matching Spark's NaN-is-largest
-    * `>=`), so the output rows are bit-identical; a pair sharing
-    * several cells is emitted once per shared cell and the final
-    * distinct folds it — over VERIFIED rows only, orders smaller than
-    * the candidate relation. Over-cap cells route to the r14
-    * relational arm unchanged (their verified pairs union in before
-    * the distinct, so overlap between arms is also folded).
-    * Set-equality with the relational feed is spec-pinned. */
-  /** Candidate-pair volume at or under which the cell kernels dispatch
-    * to the r19 relational feed: ~2M two-sided cosine verifies is a
-    * couple of seconds at 32 cores — cheaper than the kernel's fixed
-    * occupancy-split + vector-union + groupByKey machinery — mirroring
-    * [[spanningVerifiedPairs]]' `fullFeedPairLimit` economics. */
-  private[graft] val cellKernelPairLimit: Long = 2000000L
+  /** Members a block-pair task scores: (vec_id, v, norm), in id order. */
+  private type CellMember = (Long, Array[Double], Double)
 
+  /** Largest cell block the tiled kernels hold in one task, as a column
+    * over the cell's vector `width`: a task buffers two blocks of T
+    * vectors of 8-byte elements, 16·T·width bytes, which must fit the
+    * per-core share of `Runtime.maxMemory`; and T ≤ 4096, so one task's
+    * serial work is at most ~16.8M dot products. Always ≥ 1; a wider
+    * vector never gets a larger block.
+    * The heap share is read once on the driver (no job), the way
+    * [[verifyBroadcastSetBytesLimit]] reads it. */
+  private[graft] def cellBlockSize(width: Column): Column = {
+    val perCore = Runtime.getRuntime.maxMemory /
+      Runtime.getRuntime.availableProcessors
+    least(lit(4096L), greatest(lit(1L),
+      floor(lit(perCore) / (lit(16L) * greatest(width, lit(1))))))
+  }
+
+  /** The one block-tiled layout behind the four in-cell cosine kernels.
+    * Each side's members (vec_id, cell) are joined to their vectors
+    * once and numbered per cell in vec_id order (one window over the
+    * cell, which also reads the cell's widest vector and its side
+    * occupancies — no probe job); members are cut into blocks of at
+    * most T = [[cellBlockSize]] (or `blockSize` when > 0), and ONE
+    * grouping on (cell, bi, bj) hands each block pair to one task:
+    *  - one side (self kernels): every bi ≤ bj of the cell's blocks;
+    *    `lo` is block bi, `hi` block bj, and `diag` (bi = bj) means
+    *    `lo` and `hi` are the same block, so only pairs j < i count;
+    *  - two sides (cross kernel): every A block bi with every B block
+    *    bj; a cell missing either side emits nothing.
+    * Every in-cell pair (a, b) with a before b is offered to exactly
+    * one task, as (lo(j), hi(i)), so a kernel that is exact per pair
+    * is exact per cell. A small cell is one block (one task, as a
+    * per-cell scan); a mega-cell of g members spreads over
+    * ~(g/T)²/2 tasks, each holding at most 2T vectors — the block
+    * bound that replaces a per-cell occupancy cap and any relational
+    * fallback. */
+  private def tiledCellScan[O: org.apache.spark.sql.Encoder](
+      sides: Seq[(DataFrame, DataFrame)], blockSize: Int)(
+      kernel: (Array[CellMember], Array[CellMember], Boolean) => Iterator[O])
+      : org.apache.spark.sql.Dataset[O] = {
+    import org.apache.spark.sql.expressions.Window
+    val spark = sides.head._1.sparkSession
+    import spark.implicits._
+    val cross = sides.length == 2
+    val rows = sides.zipWithIndex.map { case ((members, vecs), side) =>
+      members.join(vecs.select(col("vec_id"), col("v"), col("norm")), "vec_id")
+        .select(col("cell"), lit(side).as("side"), col("vec_id"),
+          col("v"), col("norm"))
+    }.reduce(_ unionByName _)
+    val ordered = Window.partitionBy("cell").orderBy("side", "vec_id")
+    val wholeCell = ordered.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val laid = rows.select(col("*"),
+      row_number().over(ordered).as("rn"),
+      count(when(col("side") === 0, 1)).over(wholeCell).as("ga"),
+      count(when(col("side") === 1, 1)).over(wholeCell).as("gb"),
+      (if (blockSize > 0) lit(blockSize.toLong)
+       else cellBlockSize(max(size(col("v"))).over(wholeCell))).as("t"))
+    def blocks(g: Column) = ceil(g / col("t"))
+    val blk = floor((col("rn") - 1 -
+      when(col("side") === 1, col("ga")).otherwise(0L)) / col("t")).cast("int")
+    // partner blocks: the cell's own blocks (self), the other side's (cross)
+    val partners =
+      if (cross) when(col("side") === 0, blocks(col("gb"))).otherwise(blocks(col("ga")))
+      else blocks(col("ga"))
+    val (bi, bj) =
+      if (cross) (when(col("side") === 0, col("blk")).otherwise(col("c")),
+        when(col("side") === 0, col("c")).otherwise(col("blk")))
+      else (least(col("blk"), col("c")), greatest(col("blk"), col("c")))
+    val hiSide = if (cross) 1 else 0
+    laid.withColumn("blk", blk)
+      .where(partners > 0)
+      .withColumn("c", explode(sequence(lit(0), (partners - 1).cast("int"))))
+      .select(col("cell"), bi.as("bi"), bj.as("bj"), col("side"), col("blk"),
+        col("vec_id"), col("v"), col("norm"))
+      // the window's cell partitioning already satisfies the grouping,
+      // which would keep all of a mega-cell's block pairs in one task
+      .repartition(col("cell"), col("bi"), col("bj"))
+      .groupBy("cell", "bi", "bj")
+      .as[(Int, Int, Int), (Int, Int, Int, Int, Int, Long, Array[Double], Double)]
+      .flatMapGroups { (key: (Int, Int, Int),
+                        it: Iterator[(Int, Int, Int, Int, Int, Long, Array[Double], Double)]) =>
+        val (_, bi, bj) = key
+        val rows = it.toArray.sortBy(_._6)
+        def block(side: Int, b: Int): Array[CellMember] =
+          rows.collect { case r if r._4 == side && r._5 == b => (r._6, r._7, r._8) }
+        val diag = !cross && bi == bj
+        val lo = block(0, bi)
+        kernel(lo, if (diag) lo else block(hiSide, bj), diag)
+      }
+  }
+
+  /** Dot product over `vb`'s width — the in-task twin of [[dotProduct]]. */
+  @inline private def cellDot(va: Array[Double], vb: Array[Double]): Double = {
+    var s = 0.0
+    var d = 0
+    while (d < vb.length) { s += va(d) * vb(d); d += 1 }
+    s
+  }
+
+  /** Verified (a_id, b_id, cosine) rows of one block pair, per `hi`
+    * member — values are [[roundedCosine]], NaN emitted (Spark's
+    * NaN-is-largest `>=`), so rows are bit-identical to [[verifyCosine]]. */
+  private def verifiedBlockPairs(threshold: Double)(lo: Array[CellMember],
+      hi: Array[CellMember], diag: Boolean): Iterator[(Long, Long, Double)] =
+    hi.indices.iterator.flatMap { i =>
+      val (idB, vb, nb) = hi(i)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      val end = if (diag) i else lo.length
+      var j = 0
+      while (j < end) {
+        val (idA, va, na) = lo(j)
+        val r = roundedCosine(cellDot(va, vb), na, nb)
+        if (r >= threshold || r.isNaN) out += ((idA, idB, r))
+        j += 1
+      }
+      out
+    }
+
+  /** VERIFIED in-cell pair REPORT, (a_id < b_id, cosine), scored
+    * block pair by block pair ([[tiledCellScan]]) — for consumers whose
+    * output IS the verified set (dedup_embedding_lsh/_capped). The r14
+    * relational feed this replaces materialised and DISTINCTed the full
+    * C(g,2) candidate relation, then shuffled BOTH vectors into a
+    * two-sided pair join — at sf10 the 45.6M-candidate distinct+join
+    * was 38.2 s of dedup_embedding_lsh's 40.5 s. Here each vector
+    * ships once per partner block and only verified rows reach the
+    * final distinct, which folds a pair shared by several cells.
+    * Set-equality with the relational feed, at the derived block size
+    * and at forced small ones, is spec-pinned. */
   private[graft] def cellVerifiedPairs(members: DataFrame, vecs: DataFrame,
-                                       threshold: Double,
-                                       scanCellCap: Int = 8192,
-                                       maxCellScanBytes: Long = 64L << 20)
+                                       threshold: Double, blockSize: Int = 0)
       : DataFrame = {
     val spark = members.sparkSession
     import spark.implicits._
-    // SIZE DISPATCH (r20): the kernel's machinery (occupancy split,
-    // vector-carrying union, groupByKey exchange, relational over-cap
-    // arm) is ~2.8 s of fixed plan cost at sf0.1 where the whole query
-    // was 1.8 s — the same small-end inversion every dispatched feed in
-    // this file guards against. When the EXACT candidate volume
-    // (Σ C(g,2) over the cell occupancies — one aggregate over the
-    // caller-cached assignment table) is at most ~2M pairs, the r19
-    // relational feed (cell self-join + distinct + two-sided verify) is
-    // strictly cheaper and spec-pinned output-identical; the kernel is
-    // reserved for the volumes it was built for (45.6M at sf10).
-    val occ = members.groupBy("cell").agg(count(lit(1)).as("g"))
-    val estPairs = occ.agg(coalesce(
-        sum((col("g") * (col("g") - 1) / 2).cast("long")), lit(0L)))
-      .head().getLong(0)
-    if (estPairs <= cellKernelPairLimit) {
-      val cand = members.as("x").join(members.as("y"),
-          col("x.cell") === col("y.cell") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-        .distinct()
-      return verifyCosine(cand, vecs, vecs, threshold)
-    }
-    val cap = scanCapFor(vecs, scanCellCap, maxCellScanBytes)
-    val bigCells = occ.where(col("g") > cap).select("cell")
-    val withVecs = members
-      .join(vecs.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .select(col("cell"), col("vec_id"), col("v"), col("norm"))
-    val scanned = withVecs
-      .join(broadcast(bigCells), Seq("cell"), "left_anti")
-      .as[(Int, Long, Array[Double], Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, itm) =>
-        val ms = itm.toArray.sortInPlaceBy(_._2)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var i = 1
-        while (i < ms.length) {
-          val (_, idB, vb, nb) = ms(i)
-          var j = 0
-          while (j < i) {
-            val (_, idA, va, na) = ms(j)
-            var s = 0.0
-            var d = 0
-            while (d < vb.length) { s += va(d) * vb(d); d += 1 }
-            val r = roundedCosine(s, na, nb)
-            if (r >= threshold || r.isNaN) out += ((idA, idB, r))
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("a_id", "b_id", "cosine")
-    val bigMembers = members.join(broadcast(bigCells), "cell")
-    // Broadcast-roulette pin (r17 audit): over-cap cells only — no
-    // small side by construction, merge is the only safe strategy.
-    val candBig = bigMembers.as("x").hint("merge")
-      .join(bigMembers.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    scanned.unionByName(verifyCosine(candBig, vecs, vecs, threshold)).distinct()
+    tiledCellScan(Seq(members -> vecs), blockSize)(verifiedBlockPairs(threshold))
+      .toDF("a_id", "b_id", "cosine").distinct()
   }
 
-  /** Two-sided (corpus x benchmark) verified pair report as a per-cell
-    * scan — the cross twin of [[cellVerifiedPairs]], for semantic
-    * decontamination: within each shared cell every (a-side, b-side)
-    * member pair is scored in-task instead of materialising the
-    * cell-join candidate relation and shipping both vectors through a
-    * two-sided join. `aMembers`/`bMembers` are (vec_id, cell) tables
-    * assigned against the SAME centroids; `aVecs`/`bVecs` the prepared
-    * vector tables the ids resolve against. Emits one row per shared
-    * cell per verified pair; callers fold with distinct (values are
-    * deterministic, so distinct on (a_id, b_id, cosine) == distinct on
-    * the pair). Over-cap cells (by COMBINED occupancy) route to the
-    * relational arm. */
+  /** Two-sided (corpus × benchmark) verified pair report — the cross
+    * twin of [[cellVerifiedPairs]], for semantic decontamination: in
+    * each shared cell every (a-side, b-side) member pair is scored
+    * in-task, A blocks against B blocks. `aMembers`/`bMembers` are
+    * (vec_id, cell) tables assigned against the SAME centroids;
+    * `aVecs`/`bVecs` the prepared vector tables the ids resolve
+    * against. Distinct (a_id, b_id, cosine) rows: a pair sharing
+    * several cells is reported once. */
   private[graft] def cellCrossVerifiedPairs(aMembers: DataFrame,
                                             bMembers: DataFrame,
                                             aVecs: DataFrame,
                                             bVecs: DataFrame,
                                             threshold: Double,
-                                            scanCellCap: Int = 8192,
-                                            maxCellScanBytes: Long = 64L << 20)
+                                            blockSize: Int = 0)
       : DataFrame = {
     val spark = aMembers.sparkSession
     import spark.implicits._
-    // SIZE DISPATCH (r20) — the cross twin of [[cellVerifiedPairs]]'
-    // dispatch: exact candidate volume is Σ ga·gb over shared cells
-    // (one aggregate over the caller-checkpointed assignment tables);
-    // at ≤ ~2M pairs the r19 relational feed wins (measured: the
-    // kernel cost corpus_decontaminate_semantic 4.26 → 7.09 s at
-    // sf0.1, same-day A/B, while improving sf10).
-    val occ = aMembers.groupBy("cell").agg(count(lit(1)).as("ga"))
-      .join(bMembers.groupBy("cell").agg(count(lit(1)).as("gb")), "cell")
-    val estPairs = occ.agg(coalesce(
-        sum((col("ga") * col("gb")).cast("long")), lit(0L)))
-      .head().getLong(0)
-    if (estPairs <= cellKernelPairLimit) {
-      val cand = aMembers.as("x").join(bMembers.as("y"),
-          col("x.cell") === col("y.cell"))
-        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-        .distinct()
-      return verifyCosine(cand, aVecs, bVecs, threshold)
-    }
-    val cap = scanCapFor(aVecs, scanCellCap, maxCellScanBytes)
-    val bigCells = occ.where(col("ga") + col("gb") > cap).select("cell")
-    def sideRows(m: DataFrame, vecs: DataFrame, tag: Int): DataFrame =
-      m.join(vecs.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-        .select(col("cell"), lit(tag).as("side"), col("vec_id"),
-          col("v"), col("norm"))
-    val withVecs = sideRows(aMembers, aVecs, 0)
-      .unionByName(sideRows(bMembers, bVecs, 1))
-    val scanned = withVecs
-      .join(broadcast(bigCells), Seq("cell"), "left_anti")
-      .as[(Int, Int, Long, Array[Double], Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, itm) =>
-        val all = itm.toArray
-        val as = all.filter(_._2 == 0)
-        val bs = all.filter(_._2 == 1)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var i = 0
-        while (i < as.length) {
-          val (_, _, idA, va, na) = as(i)
-          var j = 0
-          while (j < bs.length) {
-            val (_, _, idB, vb, nb) = bs(j)
-            var s = 0.0
-            var d = 0
-            while (d < vb.length) { s += va(d) * vb(d); d += 1 }
-            val r = roundedCosine(s, na, nb)
-            if (r >= threshold || r.isNaN) out += ((idA, idB, r))
-            j += 1
-          }
-          i += 1
-        }
-        out
-      }
-      .toDF("a_id", "b_id", "cosine")
-    val bigA = aMembers.join(broadcast(bigCells), "cell")
-    val bigB = bMembers.join(broadcast(bigCells), "cell")
-    val candBig = bigA.as("x").hint("merge")
-      .join(bigB.as("y"), col("x.cell") === col("y.cell"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    scanned.unionByName(verifyCosine(candBig, aVecs, bVecs, threshold))
-  }
-
-  /** Effective per-cell occupancy cap for the single-task cell kernels:
-    * the caller's `scanCellCap` tightened so that a full cell's vector
-    * payload (8 bytes × dim per member; norms and tuple headers are a
-    * small constant factor on top) stays under `maxCellScanBytes`. Dim
-    * is probed from the corpus with one first-row action; an empty
-    * corpus keeps the occupancy cap (nothing will be buffered anyway). */
-  private def scanCapFor(vecs: DataFrame, scanCellCap: Int,
-                         maxCellScanBytes: Long): Int = {
-    // null-safe aggregate probe: max(size(v)) skips null vectors (a
-    // null FIRST row must not NPE the guard) and, on a mixed-dim
-    // corpus, sizes the byte cap from the WIDEST vector — the
-    // conservative choice, instead of whichever row a head(1) happens
-    // to return. One narrow aggregate over the column the consumer is
-    // about to scan anyway; empty/all-null keeps the occupancy cap
-    // (nothing will be buffered).
-    val d = vecs.agg(max(size(col("v")))).head()
-    if (d.isNullAt(0)) scanCellCap
-    else {
-      val dim = math.max(1, d.getInt(0))
-      math.max(1L, math.min(scanCellCap.toLong,
-        maxCellScanBytes / (8L * dim))).toInt
-    }
+    tiledCellScan(Seq(aMembers -> aVecs, bMembers -> bVecs), blockSize)(
+        verifiedBlockPairs(threshold))
+      .toDF("a_id", "b_id", "cosine").distinct()
   }
 
   /** Dropped ids of the IN-BATCH embedding self-dedup: every vector
@@ -1915,196 +1876,102 @@ object Dedup {
     * r13 plan) is g× too much work exactly where cells are dup-dense —
     * the common case for a near-dup corpus (r14 sf10 stage profile:
     * 45.5M candidate pairs, 63.6 s to DISTINCT them + 41.1 s to
-    * verify, for a verdict that drops 99% of vectors — most of them
-    * decidable by their first few cell-mates).
+    * verify, for a verdict that drops 99% of vectors).
     *
-    * Instead each cell is scanned IN ID ORDER in one task: vector b
-    * checks cell-mates a < b (any earlier member is a legal witness —
-    * the oracle's ∃ a<b quantifier does not require the witness to
-    * survive) and STOPS at the first hit. Expected probes per vector
-    * track how quickly a witness appears (≈1 in dup-dense cells), and
-    * the pair relation is never materialised or shuffled — the only
-    * shuffle is the one (cell → members) exchange. Per-pair decisions
-    * are the EXACT scalar twin of the relational verify
-    * ([[cosineDropDecision]]), so the all-pairs DuckDB oracle
-    * transfers unchanged; agreement with the pair-feed form is also
-    * spec-pinned directly.
-    *
-    * SKEW GUARD: a cell's scan runs in one task, and a mega-cell of
-    * mutually-DISSIMILAR vectors would cost C(g,2) probes serially.
-    * Cells with occupancy > `scanCellCap` (driver-sized id list —
-    * there are at most k cells) are routed to the r13 relational
-    * pair feed instead, which distributes their quadratic candidate
-    * volume across the cluster. At the default cap the serial worst
-    * case is ~C(8192,2) 64-dim dots ≈ 2 s — bounded tail, no lost
-    * exactness either way.
-    *
-    * MEMORY GUARD: the scan buffers a whole cell's vectors in its
-    * task, so the occupancy cap alone bounds MEMBERS but not BYTES —
-    * dim is unbounded in the API, and 8192 members × dim 4096 would be
-    * a 268 MB task buffer. The effective cap is therefore
-    * min(scanCellCap, maxCellScanBytes / (8·dim)) with dim probed from
-    * the corpus (one first-row action): high-dim corpora route to the
-    * relational arm at proportionally smaller occupancies, so no task
-    * ever buffers more than ~maxCellScanBytes of vector payload. */
+    * Instead each block pair ([[tiledCellScan]]) is scanned in id
+    * order: vector b checks the earlier members a offered with it (any
+    * earlier member is a legal witness — the oracle's ∃ a<b quantifier
+    * does not require the witness to survive) and STOPS at the first
+    * hit. A small cell is one block, so this is a per-cell ordered
+    * scan; in a multi-block cell b's witness search runs per earlier
+    * block, and the distinct folds the repeats. The pair relation is
+    * never materialised. Per-pair decisions are the EXACT scalar twin
+    * of the relational verify ([[cosineDropDecision]]), so the
+    * all-pairs DuckDB oracle transfers unchanged; agreement with the
+    * pair-feed form is spec-pinned at the derived and forced block
+    * sizes. */
   private[graft] def embeddingSelfDroppedIds(cells: DataFrame, vecs: DataFrame,
-                                             threshold: Double,
-                                             scanCellCap: Int = 8192,
-                                             maxCellScanBytes: Long = 64L << 20)
+                                             threshold: Double, blockSize: Int = 0)
       : DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val cap = scanCapFor(vecs, scanCellCap, maxCellScanBytes)
-    val bigCells = cells.groupBy("cell").agg(count(lit(1)).as("g"))
-      .where(col("g") > cap).select("cell")
-    val members = cells
-      .join(vecs.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .select(col("cell"), col("vec_id"), col("v"), col("norm"))
-    val scanned = members
-      .join(broadcast(bigCells), Seq("cell"), "left_anti")
-      .as[(Int, Long, Array[Double], Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val ms = it.toArray.sortInPlaceBy(_._2)
-        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var i = 1
-        while (i < ms.length) {
-          val (_, idB, vb, nb) = ms(i)
-          var j = 0
-          var hit = false
-          while (j < i && !hit) {
-            val (_, _, va, na) = ms(j)
-            var s = 0.0
-            var d = 0
-            while (d < vb.length) { s += va(d) * vb(d); d += 1 }
-            hit = cosineDropDecision(s, na, nb, threshold)
-            j += 1
-          }
-          if (hit) out += idB
-          i += 1
+    tiledCellScan(Seq(cells -> vecs), blockSize) { (lo, hi, diag) =>
+      hi.indices.iterator.flatMap { i =>
+        val (idB, vb, nb) = hi(i)
+        val end = if (diag) i else lo.length
+        var j = 0
+        var hit = false
+        while (j < end && !hit) {
+          val (_, va, na) = lo(j)
+          hit = cosineDropDecision(cellDot(va, vb), na, nb, threshold)
+          j += 1
         }
-        out
+        if (hit) Some(idB) else None
       }
-      .toDF("vec_id")
-    val bigMembers = cells.join(broadcast(bigCells), "cell")
-    // Broadcast-roulette pin (r17 audit): this fallback arm only runs
-    // for over-cap cells, so each side is hot-cell-membership-sized —
-    // (vec_id, cell) long pairs with NO small side by construction;
-    // merge is the only safe strategy (the r16 OOM class), and the
-    // arm's small-corpus cost is nil because small cells take the
-    // scan arm.
-    val candBig = bigMembers.as("x").hint("merge")
-      .join(bigMembers.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    scanned.unionByName(
-      verifyCosine(candBig, vecs, vecs, threshold)
-        .select(col("b_id").as("vec_id")))
-      .distinct()
+    }.toDF("vec_id").distinct()
   }
 
   /** Spanning-FOREST edges of the in-cell verified cosine graph — the
-    * CLOSURE consumer's twin of [[embeddingSelfDroppedIds]]. The full
-    * cell feed materialises every in-cell pair and verifies all of
-    * them so that connected components can throw most of the result
-    * away; a closure consumer only needs, per cell, enough verified
-    * edges to connect what the full feed connects. Each cell is
-    * processed in ONE task with a union-find over its members
-    * (id-sorted, deterministic): a pair is cosine-tested ONLY when its
-    * endpoints are still in different components, and every verified
-    * test unions them and emits that one edge — at most g−1 emissions
-    * per cell, and in dup-dense cells most pair tests are SKIPPED
-    * because the endpoints already share a component. Per-pair
-    * decisions are the exact scalar twin of the relational verify
-    * ([[cosineDropDecision]]).
+    * CLOSURE consumer's twin of [[embeddingSelfDroppedIds]]. A closure
+    * consumer only needs enough verified edges to connect what the full
+    * cell feed connects. Each block pair ([[tiledCellScan]]) runs a
+    * union-find over its members (id-sorted, deterministic): a pair is
+    * cosine-tested ONLY when its endpoints are still in different
+    * components, and every verified test unions them and emits that one
+    * edge — at most 2T−1 emissions per task, and in dup-dense cells
+    * most pair tests are SKIPPED. Per-pair decisions are the exact
+    * scalar twin of the relational verify ([[cosineDropDecision]]).
     *
-    * CLOSURE EQUALITY with the full cell feed: within a cell, the
-    * union-find tests every cross-component pair in a fixed order and
-    * unions on every verified edge, so two members end in one
-    * component iff they are connected in the cell's verified subgraph
-    * (a pair skipped as same-component was already connected; a pair
-    * tested and failed contributes nothing in either feed) — the
-    * emitted forest spans exactly the full feed's per-cell components.
-    * Across cells the full feed also has only in-cell edges, so global
-    * closure connects cells solely through SHARED MEMBERS — node
-    * identity, which the downstream [[connectedComponents]] preserves
-    * over the forest exactly as over the full pair set. Spec-pinned
-    * (label equality vs the full feed's closure on both dispatch arms)
-    * and certified end-to-end by the emb_clusters_lsh == emb_clusters
-    * invariant at the oracle SF.
-    *
-    * Same mega-cell guard as the scan — both the occupancy cap and the
-    * bytes cap (see [[embeddingSelfDroppedIds]]' MEMORY GUARD): cells
-    * above the effective cap route to the relational full feed (their
-    * verified pairs are a closure superset of any forest), so no
-    * serial task ever owns an unbounded C(g,2) or buffers more than
-    * ~`maxCellScanBytes` of vectors. */
+    * CLOSURE EQUALITY with the full cell feed: each task's union-find
+    * tests every cross-component pair of ITS pair set in a fixed order
+    * and unions on every verified edge, so its forest spans exactly the
+    * components of its share of the verified graph (a pair skipped as
+    * same-component was already connected; a failed test contributes
+    * nothing in either feed). The tasks' pair sets partition the cell's
+    * pairs, so the union of their forests connects exactly what the
+    * cell's verified graph connects; across cells the full feed also
+    * has only in-cell edges, so global closure joins cells solely
+    * through SHARED MEMBERS — node identity, which
+    * [[connectedComponents]] preserves over the forest as over the full
+    * pair set. Spec-pinned (label equality vs the full feed's closure at
+    * the derived and forced block sizes) and certified end-to-end by the
+    * emb_clusters_lsh == emb_clusters invariant at the oracle SF. */
   private[graft] def embeddingCellForestEdges(cells: DataFrame,
                                               vecs: DataFrame,
                                               threshold: Double,
-                                              scanCellCap: Int = 8192,
-                                              maxCellScanBytes: Long = 64L << 20)
+                                              blockSize: Int = 0)
       : DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val cap = scanCapFor(vecs, scanCellCap, maxCellScanBytes)
-    val bigCells = cells.groupBy("cell").agg(count(lit(1)).as("g"))
-      .where(col("g") > cap).select("cell")
-    val members = cells
-      .join(vecs.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .select(col("cell"), col("vec_id"), col("v"), col("norm"))
-    val forest = members
-      .join(broadcast(bigCells), Seq("cell"), "left_anti")
-      .as[(Int, Long, Array[Double], Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val ms = it.toArray.sortInPlaceBy(_._2)
-        val parent = Array.tabulate(ms.length)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
+    tiledCellScan(Seq(cells -> vecs), blockSize) { (lo, hi, diag) =>
+      // union-find slots: lo then hi (one shared block on the diagonal)
+      val off = if (diag) 0 else lo.length
+      val parent = Array.tabulate(off + hi.length)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      hi.indices.iterator.flatMap { i =>
+        val (idB, vb, nb) = hi(i)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        var i = 1
-        while (i < ms.length) {
-          val (_, idB, vb, nb) = ms(i)
-          var j = 0
-          while (j < i) {
-            if (find(i) != find(j)) {
-              val (_, idA, va, na) = ms(j)
-              var s = 0.0
-              var d = 0
-              while (d < vb.length) { s += va(d) * vb(d); d += 1 }
-              if (cosineDropDecision(s, na, nb, threshold)) {
-                parent(find(i)) = find(j)
-                out += ((idA, idB))
-              }
+        val end = if (diag) i else lo.length
+        var j = 0
+        while (j < end) {
+          if (find(off + i) != find(j)) {
+            val (idA, va, na) = lo(j)
+            if (cosineDropDecision(cellDot(va, vb), na, nb, threshold)) {
+              parent(find(off + i)) = find(j)
+              out += ((idA, idB))
             }
-            j += 1
           }
-          i += 1
+          j += 1
         }
         out
       }
-      .toDF("a_id", "b_id")
-    val bigMembers = cells.join(broadcast(bigCells), "cell")
-    // Broadcast-roulette pin (r17 audit): this fallback arm only runs
-    // for over-cap cells, so each side is hot-cell-membership-sized —
-    // (vec_id, cell) long pairs with NO small side by construction;
-    // merge is the only safe strategy (the r16 OOM class), and the
-    // arm's small-corpus cost is nil because small cells take the
-    // scan arm.
-    val candBig = bigMembers.as("x").hint("merge")
-      .join(bigMembers.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    forest.unionByName(
-      verifyCosine(candBig, vecs, vecs, threshold).select("a_id", "b_id"))
+    }.toDF("a_id", "b_id")
   }
 
   /** Closure-bound edge feed over IVF cells — what `emb_clusters_lsh`
@@ -2116,20 +1983,17 @@ object Dedup {
     * fail at moderate thresholds and the residual degenerates); the
     * union-find forest has neither failure mode: it never pays a
     * second relational round, and a failed test costs one dot product,
-    * not an extra feed. */
+    * not an extra feed. The prepared input is checkpointed once and
+    * the forest is returned as a lazy plan: its consumer,
+    * [[connectedComponents]], persists its own edge table. */
   def embeddingClusterEdges(emb: DataFrame, threshold: Double,
                             centroidsK: Int = 0, assign: Int = 2)
       : DataFrame = {
-    val e = Similarity.prepared(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Similarity.prepared(emb).localCheckpoint()
     // shared assignment: rides the application-level cell cache, so a
     // run that already paid the pair report's train+assign pays only
     // the forest here (and vice versa)
-    val cells = embeddingCells(emb, centroidsK, assign)
-    val edges = embeddingCellForestEdges(cells, e, threshold)
-      .localCheckpoint()
-    e.unpersist(false)
-    edges
+    embeddingCellForestEdges(embeddingCells(emb, centroidsK, assign), e, threshold)
   }
 
   /** One embedding-dedup increment step against an EXISTING side given

@@ -1272,12 +1272,12 @@ object LlmQueries {
     // full feed plus two extra verify rounds (sf10: 38.9 s full feed vs
     // 146.6 s spanning). Spanning stays the right shape for minhash
     // buckets, whose members are near-cliques at any real threshold.
-    // r14: the closure consumer now feeds on the per-cell union-find
-    // spanning FOREST (embeddingCellForestEdges) instead of the
+    // The closure consumer feeds on the union-find spanning FOREST of
+    // each cell's block pairs (embeddingCellForestEdges) instead of the
     // materialised in-cell pair relation — closure-equal (proof at the
-    // method, label-equality spec on both dispatch arms, and this
-    // query's own invariant vs emb_clusters), with pair tests skipped
-    // wherever the endpoints already share a component
+    // method, label-equality spec at the derived and forced block sizes,
+    // and this query's own invariant vs emb_clusters), with pair tests
+    // skipped wherever the endpoints already share a component
     "emb_clusters_lsh" -> ((s, d) =>
       Dedup.connectedComponents(
           Dedup.embeddingClusterEdges(emb(s, d), threshold = 0.45),

@@ -429,36 +429,38 @@ class DedupSimilaritySpec extends SparkSpec {
     sets.unpersist(false)
   }
 
-  test("embeddingCellForestEdges: forest closure == full cell-feed closure, both arms") {
-    // the closure contract: the per-cell union-find forest must label
-    // every vector exactly as the materialised full cell feed does —
-    // on the scan arm AND the big-cell relational fallback (forced
-    // with cap=1); emitted edges must also be true >=threshold pairs
+  test("embeddingCellForestEdges: forest closure == full cell-feed closure at any tiling") {
+    // the closure contract: the block-pair union-find forests must label
+    // every vector exactly as the materialised full cell feed does — at
+    // the derived block size and at forced tilings of 1 and 3, on the
+    // oracle-SF cells and on the planted ones; emitted edges must also
+    // be true >=threshold pairs
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val e = Similarity.prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = Similarity.trainIvfCentroids(e, 0)
-    val cells = Similarity.cellAssignments(e, centroids, 2).localCheckpoint()
-    val fullPairs = cells.as("x").join(cells.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    val fullVerified = Dedup.verifyCosine(fullPairs, e, e, 0.45)
-      .select("a_id", "b_id").localCheckpoint()
-    def labels(edges: org.apache.spark.sql.DataFrame) =
-      Dedup.connectedComponents(edges, emb, idCol = "vec_id")
-        .as[(Long, Long)].collect().toSet
-    val want = labels(fullVerified)
-    val forest = Dedup.embeddingCellForestEdges(cells, e, 0.45)
-      .localCheckpoint()
-    // every forest edge is a true verified pair (subset of full feed)
-    assert(forest.join(fullVerified, Seq("a_id", "b_id"), "left_anti")
-      .count() == 0, "forest emitted a non-verified edge")
-    assert(labels(forest) == want)
-    // cap=1 routes every cell through the relational fallback arm
-    val big = Dedup.embeddingCellForestEdges(cells, e, 0.45, scanCellCap = 1)
-    assert(labels(big) == want)
-    assert(want.exists { case (id, c) => id != c }, "data should cluster")
+    Seq(Similarity.cellAssignments(e, centroids, 2).localCheckpoint() -> e,
+      plantedCells(0L, 14)).foreach { case (cells, vecs) =>
+      val fullPairs = cells.as("x").join(cells.as("y"),
+          col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
+        .distinct()
+      val fullVerified = Dedup.verifyCosine(fullPairs, vecs, vecs, 0.45)
+        .select("a_id", "b_id").localCheckpoint()
+      def labels(edges: org.apache.spark.sql.DataFrame) =
+        Dedup.connectedComponents(edges, vecs, idCol = "vec_id")
+          .as[(Long, Long)].collect().toSet
+      val want = labels(fullVerified)
+      assert(want.exists { case (id, c) => id != c }, "data should cluster")
+      tilings.foreach { bs =>
+        val forest = Dedup.embeddingCellForestEdges(cells, vecs, 0.45, blockSize = bs)
+          .localCheckpoint()
+        // every forest edge is a true verified pair (subset of full feed)
+        assert(forest.join(fullVerified, Seq("a_id", "b_id"), "left_anti")
+          .count() == 0, s"block size $bs: forest emitted a non-verified edge")
+        assert(labels(forest) == want, s"block size $bs")
+      }
+    }
     e.unpersist(false)
   }
 
@@ -554,13 +556,16 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(asSet(viaLabels) == asSet(viaPairs))
   }
 
-  test("bytes-based cell cap: a fat high-dim cell routes to the relational arm unchanged") {
-    // dim is unbounded in the API, so the occupancy cap alone bounds
-    // MEMBERS but not task-buffer BYTES: with maxCellScanBytes = 3
-    // members' worth of dim-1024 payload (8·1024·3 bytes), the
-    // effective cap is 3 and this 6-member cell must take the
-    // relational fallback — with output identical to the scan arm
-    // (default caps: 64 MB / dim 1024 -> cap 8192, scan arm)
+  test("cell block size: at least 1, never larger for wider vectors, exact at dim 1024") {
+    // T = min(4096, per-core heap share / (16 × width)) bounds a
+    // block-pair task's vector payload by the heap; the kernels' output
+    // must not depend on it — a dim-1024 cell gives the same drops and
+    // forest at the derived T as at T = 1
+    val ts = Seq(1, 64, 1024, 1 << 16, 1 << 20, 1 << 26).toDF("w")
+      .select(Dedup.cellBlockSize(col("w"))).as[Long].collect().toSeq
+    assert(ts.forall(t => t >= 1 && t <= 4096), ts)
+    assert(ts.zip(ts.tail).forall { case (a, b) => b <= a }, ts)
+    assert(ts.last < 4096, s"a 2^26-wide vector must shrink the block: $ts")
     val dim = 1024
     val rnd = new scala.util.Random(7)
     def randVec() = Array.fill(dim)(rnd.nextGaussian())
@@ -571,50 +576,49 @@ class DedupSimilaritySpec extends SparkSpec {
       (id, v, math.sqrt(v.map(x => x * x).sum))
     }.toDF("vec_id", "v", "norm")
     val cells = vecsSeq.map { case (id, _) => (id, 0) }.toDF("vec_id", "cell")
-    val fatBytes = 8L * dim * 3
-    val scanDrops = Dedup.embeddingSelfDroppedIds(cells, vecs, 0.45)
+    val derivedDrops = Dedup.embeddingSelfDroppedIds(cells, vecs, 0.45)
       .as[Long].collect().toSet
-    val fatDrops = Dedup.embeddingSelfDroppedIds(cells, vecs, 0.45,
-        maxCellScanBytes = fatBytes)
+    val unitDrops = Dedup.embeddingSelfDroppedIds(cells, vecs, 0.45, blockSize = 1)
       .as[Long].collect().toSet
-    assert(scanDrops == Set(1L) && fatDrops == scanDrops)
+    assert(derivedDrops == Set(1L) && unitDrops == derivedDrops)
     def labels(edges: org.apache.spark.sql.DataFrame) =
       Dedup.connectedComponents(edges, vecs, idCol = "vec_id")
         .as[(Long, Long)].collect().toSet
-    val scanForest = Dedup.embeddingCellForestEdges(cells, vecs, 0.45)
-    val fatForest = Dedup.embeddingCellForestEdges(cells, vecs, 0.45,
-      maxCellScanBytes = fatBytes)
-    assert(labels(scanForest) == labels(fatForest))
-    assert(labels(fatForest).contains(1L -> 0L), "dup pair must cluster")
+    val derivedForest = labels(Dedup.embeddingCellForestEdges(cells, vecs, 0.45))
+    assert(labels(Dedup.embeddingCellForestEdges(cells, vecs, 0.45, blockSize = 1)) ==
+      derivedForest)
+    assert(derivedForest.contains(1L -> 0L), "dup pair must cluster")
   }
 
-  test("embeddingSelfDroppedIds: ordered scan == pair-feed drops, both dispatch arms") {
+  test("embeddingSelfDroppedIds: ordered scan == pair-feed drops at any tiling") {
     // the in-batch self side's early-exit witness scan must agree
     // bit-for-bit with the relational pair feed it replaced — same
-    // cells, same 6-dp-rounded cosine decision — on BOTH dispatch
-    // arms (per-cell scan AND the big-cell relational fallback, forced
-    // here with a tiny occupancy cap)
+    // cells, same 6-dp-rounded cosine decision — at the derived block
+    // size and at forced tilings of 1 and 3, on the oracle-SF cells and
+    // on the planted ones
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val inc = Similarity.prepared(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = Similarity.trainIvfCentroids(inc, 0)
-    val cells = Similarity.cellAssignments(inc, centroids, 2).localCheckpoint()
-    // reference: the r13 pair-feed form (emit all in-cell a<b pairs,
-    // exact-cosine verify, drop the b side)
-    val candSelf = cells.as("x").join(cells.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-      .distinct()
-    val viaPairs = Dedup.verifyCosine(candSelf, inc, inc, 0.45)
-      .select(col("b_id")).as[Long].collect().toSet
-    val viaScan = Dedup.embeddingSelfDroppedIds(cells, inc, 0.45)
-      .select("vec_id").as[Long].collect().toSet
-    assert(viaScan == viaPairs, s"scan ${viaScan.size} vs pairs ${viaPairs.size}")
-    // cap=1 forces EVERY cell through the relational fallback arm
-    val viaBig = Dedup.embeddingSelfDroppedIds(cells, inc, 0.45, scanCellCap = 1)
-      .select("vec_id").as[Long].collect().toSet
-    assert(viaBig == viaPairs)
-    assert(viaPairs.nonEmpty, "test data should exercise drops")
+    Seq(Similarity.cellAssignments(inc, centroids, 2).localCheckpoint() -> inc,
+      plantedCells(0L, 15)).foreach { case (cells, vecs) =>
+      // reference: the r13 pair-feed form (emit all in-cell a<b pairs,
+      // exact-cosine verify, drop the b side)
+      val candSelf = cells.as("x").join(cells.as("y"),
+          col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
+        .distinct()
+      val viaPairs = Dedup.verifyCosine(candSelf, vecs, vecs, 0.45)
+        .select(col("b_id")).as[Long].collect().toSet
+      assert(viaPairs.nonEmpty, "test data should exercise drops")
+      tilings.foreach { bs =>
+        val viaScan = Dedup.embeddingSelfDroppedIds(cells, vecs, 0.45, blockSize = bs)
+          .as[Long].collect().toSeq
+        assert(viaScan.toSet == viaPairs,
+          s"block size $bs: scan ${viaScan.size} vs pairs ${viaPairs.size}")
+        assert(viaScan.size == viaPairs.size, s"block size $bs: an id dropped twice")
+      }
+    }
     inc.unpersist(false)
   }
 
@@ -1741,14 +1745,16 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
-  /** `n` random 64-dim vectors with ids from `idBase`; every 50th is a
-    * near-copy of the one before it, so a cell of them verifies pairs. */
-  private def randomVecs(n: Int, idBase: Long, seed: Int): org.apache.spark.sql.DataFrame = {
+  /** `n` random 64-dim vectors with ids from `idBase`; every
+    * `copyEvery`-th is a near-copy of the one before it, so a cell of
+    * them verifies pairs. */
+  private def randomVecs(n: Int, idBase: Long, seed: Int,
+                         copyEvery: Int = 50): org.apache.spark.sql.DataFrame = {
     val rnd = new scala.util.Random(seed)
     var prev = Array.empty[Float]
     val rows = (0 until n).map { i =>
       val v =
-        if (i % 50 == 49) prev.map(x => x + 0.05f * rnd.nextGaussian().toFloat)
+        if (i % copyEvery == copyEvery - 1) prev.map(x => x + 0.05f * rnd.nextGaussian().toFloat)
         else Array.fill(64)(rnd.nextGaussian().toFloat)
       prev = v
       (idBase + i, v)
@@ -1756,24 +1762,32 @@ class DedupSimilaritySpec extends SparkSpec {
     Similarity.prepared(rows.toDF("vec_id", "embedding"))
   }
 
-  /** Every vector of `vecs` as a member of cell 0. */
-  private def oneCell(vecs: org.apache.spark.sql.DataFrame) =
-    vecs.select(col("vec_id"), lit(0).as("cell"))
+  /** Twelve vectors from `idBase`, each odd one a near-copy of the one
+    * before it, and their cells: the first eleven in cell 0 (block size
+    * 3 leaves it a short last block) and the first six also in cell 1,
+    * so their pairs share two cells. */
+  private def plantedCells(idBase: Long, seed: Int)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val vecs = randomVecs(12, idBase, seed, copyEvery = 2)
+    val rank = col("vec_id") - idBase
+    (vecs.where(rank < 11).select(col("vec_id"), lit(0).as("cell"))
+      .unionByName(vecs.where(rank < 6).select(col("vec_id"), lit(1).as("cell"))),
+      vecs)
+  }
 
-  test("cell pair-report scan kernel === the relational cell feed (both arms)") {
-    // r20: the per-cell scan kernel replaces the candidate
-    // distinct+two-sided-join feed of dedup_embedding_lsh/_capped;
-    // this pins exact (a_id, b_id, cosine) set equality against the
-    // retained relational form. The oracle-SF corpus sits under
-    // cellKernelPairLimit, so every call on it takes the relational
-    // feed; one synthetic cell of 2,100 members (C(2100,2) ≈ 2.2M
-    // candidate pairs) passes the limit, so its default call takes the
-    // scan kernel and scanCellCap = 4 routes it to the over-cap arm.
+  /** The forced tilings every cell-kernel spec runs besides the derived
+    * block size (0): one member per block, and three. */
+  private val tilings = Seq(0, 1, 3)
+
+  test("cell pair-report kernel === the relational cell feed at any tiling") {
+    // the block-tiled kernel behind dedup_embedding_lsh/_capped must
+    // reproduce the relational feed's exact (a_id, b_id, cosine) set at
+    // the derived block size (one block per cell here) and at forced
+    // tilings of 1 and 3, on the oracle-SF cells and on the planted
+    // cells (short last block; pairs sharing two cells reported once)
     import org.apache.spark.sql.DataFrame
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val e = Similarity.prepared(emb)
-    val bigVecs = randomVecs(2100, 0L, 11)
-    assert(2100L * 2099 / 2 > Dedup.cellKernelPairLimit)
     def relational(members: DataFrame, vecs: DataFrame): Set[(Long, Long, Double)] = {
       val cand = members.as("x").join(members.as("y"),
           col("x.cell") === col("y.cell") &&
@@ -1792,36 +1806,41 @@ class DedupSimilaritySpec extends SparkSpec {
         .where(col("cosine") >= 0.45)
         .as[(Long, Long, Double)].collect().toSet
     }
-    Seq((Similarity.cellAssignmentsCached(emb), e), (oneCell(bigVecs), bigVecs))
+    Seq((Similarity.cellAssignmentsCached(emb), e), plantedCells(0L, 11))
       .foreach { case (cells, vecs) =>
         val ref = relational(cells, vecs)
         assert(ref.nonEmpty, "each input must produce verified pairs")
-        val fast = Dedup.cellVerifiedPairs(cells, vecs, 0.45)
-          .as[(Long, Long, Double)].collect().toSet
-        assert(fast == ref)
-        val viaFallback = Dedup.cellVerifiedPairs(cells, vecs, 0.45, scanCellCap = 4)
-          .as[(Long, Long, Double)].collect().toSet
-        assert(viaFallback == ref)
+        tilings.foreach { bs =>
+          val got = Dedup.cellVerifiedPairs(cells, vecs, 0.45, blockSize = bs)
+            .as[(Long, Long, Double)].collect().toSeq
+          assert(got.toSet == ref, s"block size $bs")
+          assert(got.size == ref.size, s"block size $bs: a pair reported twice")
+        }
       }
   }
 
   test("cross-cell scan kernel === the relational cross feed (semantic decon)") {
-    // same two inputs as the self spec: the oracle-SF split (relational
-    // feed) and one synthetic cell of 1,500 corpus x 1,515 benchmark
-    // members (2.27M cross pairs, over cellKernelPairLimit: scan kernel
-    // by default, over-cap arm at scanCellCap = 4)
+    // the oracle-SF split, and planted cells: corpus ids 0–11 (cells 0
+    // and 1 as in plantedCells, ids 6–11 also alone in cell 3) against
+    // benchmark copies of every third corpus vector plus six random
+    // ones, in cells 0 and 1 (each copy's pair shares both cells and is
+    // reported once) and, for the random six, alone in cell 4 — cells
+    // 3 and 4 each have an empty side
     import org.apache.spark.sql.DataFrame
     val all = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val c = Similarity.prepared(all.where(col("vec_id") % 11 =!= 0))
     val b = Similarity.prepared(all.where(col("vec_id") % 11 === 0))
     val centroids = Similarity.trainIvfCentroids(c.unionByName(b), 0)
-    val bigA = randomVecs(1500, 0L, 12)
-    // the benchmark side repeats every 100th corpus vector under a new
-    // id, so the synthetic cell has cross pairs above the threshold
-    val bigB = randomVecs(1500, 100000L, 13).unionByName(
-      bigA.where(col("vec_id") % 100 === 0)
-        .select((col("vec_id") + 200000L).as("vec_id"), col("v"), col("norm")))
-    assert(1500L * 1500 > Dedup.cellKernelPairLimit)
+    val (plantedA, synthA) = plantedCells(0L, 12)
+    val synthB = synthA.where(col("vec_id") % 3 === 0)
+      .select((col("vec_id") + 100L).as("vec_id"), col("v"), col("norm"))
+      .unionByName(randomVecs(6, 200L, 13))
+    val synthAm = plantedA.unionByName(
+      synthA.where(col("vec_id") >= 6).select(col("vec_id"), lit(3).as("cell")))
+    val synthBm = synthB.select(col("vec_id"), lit(0).as("cell"))
+      .unionByName(synthB.select(col("vec_id"), lit(1).as("cell")))
+      .unionByName(synthB.where(col("vec_id") >= 200)
+        .select(col("vec_id"), lit(4).as("cell")))
     def relational(am: DataFrame, bm: DataFrame, av: DataFrame,
                    bv: DataFrame): Set[(Long, Long, Double)] =
       am.as("c").join(bm.as("b"), col("c.cell") === col("b.cell"))
@@ -1839,17 +1858,16 @@ class DedupSimilaritySpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSet
     Seq((Similarity.cellAssignments(c, centroids, 2),
         Similarity.cellAssignments(b, centroids, 2), c, b),
-      (oneCell(bigA), oneCell(bigB), bigA, bigB))
+      (synthAm, synthBm, synthA, synthB))
       .foreach { case (am, bm, av, bv) =>
         val ref = relational(am, bm, av, bv)
         assert(ref.nonEmpty)
-        val fast = Dedup.cellCrossVerifiedPairs(am, bm, av, bv, 0.45)
-          .distinct().as[(Long, Long, Double)].collect().toSet
-        assert(fast == ref)
-        val viaFallback = Dedup.cellCrossVerifiedPairs(am, bm, av, bv, 0.45,
-            scanCellCap = 4)
-          .distinct().as[(Long, Long, Double)].collect().toSet
-        assert(viaFallback == ref)
+        tilings.foreach { bs =>
+          val got = Dedup.cellCrossVerifiedPairs(am, bm, av, bv, 0.45, blockSize = bs)
+            .as[(Long, Long, Double)].collect().toSeq
+          assert(got.toSet == ref, s"block size $bs")
+          assert(got.size == ref.size, s"block size $bs: a pair reported twice")
+        }
       }
   }
 

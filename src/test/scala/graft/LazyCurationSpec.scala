@@ -70,13 +70,28 @@ class LazyCurationSpec extends SparkSpec {
     // union and anti-join run at the caller's action
     val expected = Map(
       "nearDupIncrementStored" -> 8,
-      "embeddingIncrement" -> 16,
-      "flagSemanticOverlap" -> 18,
+      "embeddingIncrement" -> 14,
+      "flagSemanticOverlap" -> 11,
       "knnIvfPq" -> 12)
     val fired = builders.map { case (name, build) =>
       name -> jobsDuring { build() }
     }.toMap
     assert(fired == expected)
+  }
+
+  test("the four cell kernels fire no job at construction") {
+    // block layout, width and block size all come from the plan itself:
+    // no width probe and no pair-volume aggregate runs before an action
+    val e = Similarity.prepared(emb).localCheckpoint()
+    val cells = Similarity.cellAssignmentsCached(emb)
+    val (a, b) = (cells.where(col("vec_id") % 11 =!= 0), cells.where(col("vec_id") % 11 === 0))
+    val kernels: Seq[(String, () => DataFrame)] = Seq(
+      "cellVerifiedPairs" -> (() => Dedup.cellVerifiedPairs(cells, e, 0.45)),
+      "cellCrossVerifiedPairs" -> (() => Dedup.cellCrossVerifiedPairs(a, b, e, e, 0.45)),
+      "embeddingSelfDroppedIds" -> (() => Dedup.embeddingSelfDroppedIds(cells, e, 0.45)),
+      "embeddingCellForestEdges" -> (() => Dedup.embeddingCellForestEdges(cells, e, 0.45)))
+    val fired = kernels.map { case (name, build) => name -> jobsDuring { build() } }
+    assert(fired.forall(_._2 == 0), fired)
   }
 
   test("a built plan survives the ContextCleaner: collected twice after GC, equal to an eager reference") {
