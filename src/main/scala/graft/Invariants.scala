@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 import graft.operators._
+import graft.sources.Ingestor
 
 /** In-harness invariant gate for the ROWS-ONLY queries — the entries the
   * DuckDB oracle cannot check (hash-seeded LSH, trained models, sketch
@@ -29,9 +30,9 @@ import graft.operators._
 object Invariants {
 
   private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Ingestor.read(s, s"$d/documents.parquet")
   private def emb(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/embeddings.parquet")
+    Ingestor.read(s, s"$d/embeddings.parquet")
   private def q(s: SparkSession, d: String, name: String): DataFrame =
     SparkEntry.queries(name)(s, d)
 
@@ -337,7 +338,7 @@ object Invariants {
     "q_approx_sketch" -> ((s, d) => {
       // HLL estimates within 5% of exact distinct counts (rsd 0.01)
       val approx = q(s, d, "q_approx_sketch")
-      val exact = s.read.parquet(s"$d/lineitem.parquet")
+      val exact = Ingestor.read(s, s"$d/lineitem.parquet")
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_orderkey")).as("nd_ok"),
           countDistinct(col("l_partkey")).as("nd_pk"))

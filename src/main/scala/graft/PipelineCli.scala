@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{GraftSettings, IdempotencyLedger, Pipeline, RunLedger}
+import graft.sources.Ingestor
 
 /** User-facing CLI: run a pipeline from a JSON spec file, look up a
   * run's recorded stats, list a pipeline's run history.
@@ -248,7 +249,7 @@ object PipelineCli {
               // the stage for the count would run it twice, and for a
               // nondeterministic source the printed/ledgered count
               // could diverge from the artifact the next stage reads
-              r.output.sparkSession.read.parquet(p).count()
+              Ingestor.read(r.output.sparkSession, p).count()
             case None =>
               // reference prints the stage's row_count; forcing the
               // count here is the stage's entire job, not an extra scan

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Ingestor
 
 /** Deterministic scale-up generator: builds an sf-N dataset from an
   * existing sf directory by replicating every table `factor` times with
@@ -47,7 +48,7 @@ object ScaleGen {
   }
 
   def generate(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String) = Ingestor.read(spark, s"$src/$name.parquet")
     // span = max(key)+1: one driver-sized row per table, read once so
     // every referencing table shifts by the same stride.
     def span(df: DataFrame, key: String): Long =

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.streaming.EventStream
 import graft.operators.{Contamination, Dedup, Multimodal, Similarity}
+import graft.sources.Ingestor
 
 /** Streaming-sink throughput bench: drives every streaming ingest /
   * serve sink through its (package-visible) per-micro-batch core over a
@@ -57,9 +58,9 @@ object StreamBench {
     import spark.implicits._
 
     val base = Files.createTempDirectory("graft_streambench").toString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Ingestor.read(spark, s"$sfDir/documents.parquet")
       .localCheckpoint() // batches must not re-pay the source scan
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").localCheckpoint()
+    val emb = Ingestor.read(spark, s"$sfDir/embeddings.parquet").localCheckpoint()
     val nDocs = docs.count()
     val nEmb = emb.count()
     def docBatch(b: Int): DataFrame = docs.where(col("doc_id") % nBatches === b)
@@ -104,7 +105,7 @@ object StreamBench {
     } {
       // decompose the final batch: probe+verify alone vs full replay
       val lastB = nBatches - 1
-      def earlier(dir: String) = spark.read.parquet(dir)
+      def earlier(dir: String) = Ingestor.read(spark, dir)
         .where(col("__batch_id") < lastB).drop("__batch_id")
       val (_, probeMs) = timed {
         val (kept, ks, kb) = Dedup.nearDupStateStep(
@@ -127,17 +128,17 @@ object StreamBench {
         s"$base/embmodel", s"$base/em/corpus", emState, 0.45)
     } {
       val lastB = nBatches - 1
-      def earlier(dir: String) = spark.read.parquet(dir)
+      def earlier(dir: String) = Ingestor.read(spark, dir)
         .where(col("__batch_id") < lastB).drop("__batch_id")
       val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(spark.read.parquet(s"$base/embmodel/centroids")
+        .unsafeWrapArray(Ingestor.read(spark, s"$base/embmodel/centroids")
           .select("centroid_id", "v").as[(Int, Array[Double])]
           .collect().sortBy(_._1).map(_._2))
-      val assign = spark.read.parquet(s"$base/embmodel/meta")
+      val assign = Ingestor.read(spark, s"$base/embmodel/meta")
         .select("assign").as[Int].head()
-      val exVecs = spark.read.parquet(s"$base/embmodel/vectors")
+      val exVecs = Ingestor.read(spark, s"$base/embmodel/vectors")
         .unionByName(earlier(s"$emState/vectors"))
-      val exCells = spark.read.parquet(s"$base/embmodel/cells")
+      val exCells = Ingestor.read(spark, s"$base/embmodel/cells")
         .unionByName(earlier(s"$emState/cells"))
       val (_, probeMs) = timed {
         val (kept, kv, kc) = Dedup.embeddingStateStep(exVecs, exCells,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import graft.sources.Ingestor
 
 /** Distributed BPE tokenizer training + encoding (Sennrich et al. 2016,
   * the GPT-2 byte-pair shape), the tokenizer-construction stage of an
@@ -166,7 +167,7 @@ object Bpe {
       .coalesce(1).write.mode("overwrite").parquet(dir)
 
   def load(spark: SparkSession, dir: String): BpeModel = {
-    val rows = spark.read.parquet(dir)
+    val rows = Ingestor.read(spark, dir)
       .select("rank", "left", "right",
         "capped_words", "total_words", "capped_mass", "total_mass")
       .collect().sortBy(_.getLong(0))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Ingestor
 
 /** Change-data-capture semantics over ordinary DataFrames: replaying an
   * insert/update/delete changelog into current state, and building
@@ -169,12 +170,12 @@ object Cdc {
                             refDir: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val stored = spark.read.parquet(s"$refDir/meta")
+    val stored = Ingestor.read(spark, s"$refDir/meta")
       .select("dims").as[String].head()
     val mine = dims.map(_._1).mkString(",")
     require(stored == mine,
       s"drift profile at $refDir monitors [$stored] but the caller asked for [$mine]")
-    val ref = spark.read.parquet(s"$refDir/ref")
+    val ref = Ingestor.read(spark, s"$refDir/ref")
     val w = Window.partitionBy("dim")
     sideCountsFor(batch, dims, "n_batch")
       .join(ref, Seq("dim", "cell"), "full_outer")

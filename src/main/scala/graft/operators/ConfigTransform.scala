@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.{LiteralFunctionResolution, UnresolvedAttribute}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -98,8 +99,12 @@ class ConfigTransform(config: JValue) {
           case (name, JString(s)) =>
             // Expression if it parses AND resolves against the frame,
             // else a string literal (ref :252-259 eval-then-literal).
-            r = Try(r.withColumn(name, expr(s)))
-              .getOrElse(r.withColumn(name, lit(s)))
+            // The common literal (a bare word naming no column) is told
+            // apart before analysis: a failed analysis is reported to
+            // every query-execution listener.
+            r = if (!resolvesAgainst(r, s)) r.withColumn(name, lit(s))
+              else Try(r.withColumn(name, expr(s)))
+                .getOrElse(r.withColumn(name, lit(s)))
           case (name, v) => r = r.withColumn(name, jvalueToLit(v))
         }
       case _ =>
@@ -119,6 +124,18 @@ class ConfigTransform(config: JValue) {
     }
     r
   }
+
+  /** True iff `s` parses as a SQL expression and every column it names
+    * resolves against `df`, or is a bare literal function such as
+    * `current_date` (the parser already binds lambda variables). */
+  private def resolvesAgainst(df: DataFrame, s: String): Boolean =
+    Try(df.sparkSession.sessionState.sqlParser.parseExpression(s)).toOption.exists { e =>
+      val plan = df.queryExecution.analyzed
+      val resolver = df.sparkSession.sessionState.conf.resolver
+      e.collect { case a: UnresolvedAttribute => a.nameParts }
+        .forall(n => plan.resolve(n, resolver).isDefined ||
+          LiteralFunctionResolution.resolve(n).isDefined)
+    }
 
   /** Filter op set, reference config_transformer.py:204-242. */
   private def compileFilter(df: DataFrame, c: String, spec: JValue): Seq[Column] = {

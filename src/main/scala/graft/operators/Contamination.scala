@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.sources.Ingestor
 
 /** Benchmark decontamination: flag training documents that share any
   * word n-gram with a held-out benchmark/eval set, so eval answers are
@@ -413,7 +414,7 @@ object Contamination {
                          textCol: String = "text"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val meta = spark.read.parquet(s"$dir/meta")
+    val meta = Ingestor.read(spark, s"$dir/meta")
     val fmt =
       if (meta.columns.contains("fmt")) meta.select("fmt").as[Int].head() else 1
     require(fmt == GramKeyFormat,
@@ -430,7 +431,7 @@ object Contamination {
       finally in.close()
     val suspects = suspectsWithBloom(corpus, bloom, n, idCol, textCol)
     reportFromSuspects(corpus, suspects,
-      spark.read.parquet(s"$dir/grams"), n, idCol, textCol)
+      Ingestor.read(spark, s"$dir/grams"), n, idCol, textCol)
   }
 
   /** Filtering form of [[flagOverlapIndexed]]. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import graft.functions._
+import graft.sources.Ingestor
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard
   * verification, embedding-cosine.
@@ -2158,14 +2159,14 @@ object Dedup {
                                threshold: Double = 0.45): DataFrame = {
     val spark = incoming.sparkSession
     import spark.implicits._
-    val assign = spark.read.parquet(s"$dir/meta").select("assign").as[Int].head()
+    val assign = Ingestor.read(spark, s"$dir/meta").select("assign").as[Int].head()
     val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(spark.read.parquet(s"$dir/centroids")
+      .unsafeWrapArray(Ingestor.read(spark, s"$dir/centroids")
         .select("centroid_id", "v").as[(Int, Array[Double])]
         .collect().sortBy(_._1).map(_._2))
     val (survivors, _, _) = embeddingStateStep(
-      spark.read.parquet(s"$dir/vectors"),
-      spark.read.parquet(s"$dir/cells"),
+      Ingestor.read(spark, s"$dir/vectors"),
+      Ingestor.read(spark, s"$dir/cells"),
       centroids, incoming, threshold, assign, materializeState = false)
     survivors
   }
@@ -2252,7 +2253,7 @@ object Dedup {
     connectedComponents(
       minhashNearDups(docs, threshold, k, bands, spanning = true), docs, idCol)
       .write.mode("overwrite").parquet(s"$dir/labels")
-    val n = spark.read.parquet(s"$dir/labels").count()
+    val n = Ingestor.read(spark, s"$dir/labels").count()
     Seq((threshold, k, bands, n)).toDF("threshold", "k", "bands", "n_docs")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
@@ -2269,11 +2270,11 @@ object Dedup {
   def closureFromStored(spark: org.apache.spark.sql.SparkSession, dir: String,
                         expectThreshold: Double = -1.0): DataFrame = {
     if (expectThreshold >= 0) {
-      val t = spark.read.parquet(s"$dir/meta").select("threshold").head().getDouble(0)
+      val t = Ingestor.read(spark, s"$dir/meta").select("threshold").head().getDouble(0)
       require(t == expectThreshold,
         s"stored closure at $dir was built at threshold $t, caller expects $expectThreshold")
     }
-    spark.read.parquet(s"$dir/labels")
+    Ingestor.read(spark, s"$dir/labels")
   }
 
   /** Probe-phase incremental near-dup dedup against a STORED state dir

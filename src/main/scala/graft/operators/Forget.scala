@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Ingestor
 
 /** Right-to-be-forgotten / deletion propagation — removing documents not
   * just from the corpus but from every DERIVED stored artifact the
@@ -117,7 +118,7 @@ object Forget {
   def forgetStateTable(spark: SparkSession, dir: String,
                        deleteIds: DataFrame, idCol: String): Unit = {
     recoverRewrite(spark, dir)
-    val filtered = spark.read.parquet(dir).join(
+    val filtered = Ingestor.read(spark, dir).join(
       broadcast(deleteIds.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
     rewriteInPlace(filtered, dir)
   }
@@ -133,7 +134,7 @@ object Forget {
   def forgetFingerprints(spark: SparkSession, fpDir: String,
                          fingerprints: DataFrame): Unit = {
     recoverRewrite(spark, fpDir)
-    val filtered = spark.read.parquet(fpDir).join(
+    val filtered = Ingestor.read(spark, fpDir).join(
       broadcast(fingerprints.select(col("fingerprint")).distinct()),
       Seq("fingerprint"), "left_anti")
     rewriteInPlace(filtered, fpDir)
@@ -150,7 +151,7 @@ object Forget {
                              deleteIds: DataFrame, idCol: String,
                              partCol: String = "__batch_id"): Unit = {
     import spark.implicits._
-    val table = spark.read.parquet(dir)
+    val table = Ingestor.read(spark, dir)
     val ids = broadcast(deleteIds.select(col(idCol)).distinct())
     val affected = table.join(ids, Seq(idCol), "left_semi")
       .select(col(partCol).cast("long")).distinct().as[Long].collect()
@@ -185,12 +186,12 @@ object Forget {
     import spark.implicits._
     forgetStateTable(spark, s"$dir/vectors", deleteIds, "vec_id")
     forgetStateTable(spark, s"$dir/cells", deleteIds, "vec_id")
-    val n = spark.read.parquet(s"$dir/vectors").count()
-    val (k, assign, dim) = spark.read.parquet(s"$dir/meta")
+    val n = Ingestor.read(spark, s"$dir/vectors").count()
+    val (k, assign, dim) = Ingestor.read(spark, s"$dir/meta")
       .select("k", "assign", "dim").as[(Int, Int, Int)].head()
     Seq((k, assign, dim, n)).toDF("k", "assign", "dim", "n_vecs")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta__next")
-    rewriteInPlace(spark.read.parquet(s"$dir/meta__next"), s"$dir/meta")
+    rewriteInPlace(Ingestor.read(spark, s"$dir/meta__next"), s"$dir/meta")
     fs(spark, dir).delete(
       new org.apache.hadoop.fs.Path(s"$dir/meta__next"), true)
   }

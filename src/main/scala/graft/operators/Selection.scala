@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.Ingestor
 
 /** Token-budget-constrained corpus selection: keep the highest-quality
   * documents — in total (quality DESC, doc_id ASC) order — whose
@@ -182,7 +183,7 @@ object Selection {
   def dsirStored(pool: DataFrame, modelDir: String, budget: Int,
                  buckets: Int = 4096, seed: String = "dsir-v1",
                  textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val ratio = pool.sparkSession.read.parquet(modelDir)
+    val ratio = Ingestor.read(pool.sparkSession, modelDir)
     selectWeighted(tokenBuckets(pool, buckets, textCol, idCol),
       broadcast(ratio), budget, seed, idCol)
   }

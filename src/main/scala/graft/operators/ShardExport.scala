@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.Ingestor
 
 /** Tokenized training-shard export — the pipeline's LAST MILE: encode
   * the corpus with a (stored) BPE merge table, concat-and-chunk the
@@ -95,7 +96,7 @@ object ShardExport {
     * training. */
   def export(wins: DataFrame, dir: String): DataFrame = {
     wins.write.mode("overwrite").partitionBy("shard_id").parquet(dir)
-    manifest(wins.sparkSession.read.parquet(dir))
+    manifest(Ingestor.read(wins.sparkSession, dir))
   }
 
   /** Per-shard manifest of a window relation: (shard_id, n_windows,

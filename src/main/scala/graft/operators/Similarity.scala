@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.sources.Ingestor
 
 /** Similarity search over embedding columns: brute-force cosine top-k
   * (the exactness baseline) and random-hyperplane LSH-bucketed ANN (the
@@ -828,13 +829,13 @@ object Similarity {
     * same way the streaming state readers do. */
   private[graft] def loadCodes(spark: org.apache.spark.sql.SparkSession,
                                dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/codes")
+    val base = Ingestor.read(spark, s"$dir/codes")
     val incPath = new org.apache.hadoop.fs.Path(s"$dir/codes_inc")
     val f = incPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(incPath)) base
     else
       try base.unionByName(
-        spark.read.parquet(s"$dir/codes_inc").drop("__increment_id"))
+        Ingestor.read(spark, s"$dir/codes_inc").drop("__increment_id"))
       catch { case _: org.apache.spark.sql.AnalysisException => base }
   }
 
@@ -956,10 +957,10 @@ object Similarity {
                              dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     import spark.implicits._
-    val centArr = spark.read.parquet(s"$dir/centroids")
+    val centArr = Ingestor.read(spark, s"$dir/centroids")
       .select("centroid_id", "v").as[(Int, Array[Double])]
       .collect().sortBy(_._1).map(_._2)
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
+    val cbRows = Ingestor.read(spark, s"$dir/codebooks")
       .select("subspace", "code", "v").as[(Int, Int, Array[Double])]
       .collect()
     val m = cbRows.map(_._1).max + 1
@@ -1273,7 +1274,7 @@ object Similarity {
                      labelCol: String = "label",
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame =
-    classifyWithModel(emb, emb.sparkSession.read.parquet(dir).collect(),
+    classifyWithModel(emb, Ingestor.read(emb.sparkSession, dir).collect(),
       inTrain, labelCol, idCol, vecCol)
 
   private def classifyWithModel(emb: DataFrame,

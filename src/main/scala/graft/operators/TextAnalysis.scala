@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.sources.Ingestor
 
 /** Text-analysis operators for LLM training-data pipelines: token
   * counting, quality scoring, language ID, fingerprinting.
@@ -678,7 +679,7 @@ object TextAnalysis {
     bigramPairs(w).groupBy("a", "b").agg(count(lit(1)).as("cab"))
       .write.mode("overwrite").parquet(s"$dir/bi")
     val spark = docs.sparkSession
-    spark.read.parquet(s"$dir/uni").agg(sum("ca").as("total"))
+    Ingestor.read(spark, s"$dir/uni").agg(sum("ca").as("total"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
@@ -692,9 +693,9 @@ object TextAnalysis {
                           lambda: Double = 0.75): DataFrame = {
     val spark = docs.sparkSession
     scoreBigramsWith(docs, textCol,
-      spark.read.parquet(s"$dir/uni"),
-      spark.read.parquet(s"$dir/bi"),
-      spark.read.parquet(s"$dir/meta"), lambda)
+      Ingestor.read(spark, s"$dir/uni"),
+      Ingestor.read(spark, s"$dir/bi"),
+      Ingestor.read(spark, s"$dir/meta"), lambda)
   }
 
   /** Multi-signal quality ENSEMBLE (the FineWeb-style "blend of weak

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.sources.Ingestor
 
 /** Declarative training-corpus preparation: the LLM-data counterpart of
   * [[ConfigTransform]] — one JSON spec compiles to one Catalyst plan
@@ -109,7 +110,7 @@ object TrainingPrep {
             "decontaminate stage requires benchmark_path")
         }
         val n = num(dc \ "ngram", 8.0).toInt
-        val bench = r.sparkSession.read.parquet(path)
+        val bench = Ingestor.read(r.sparkSession, path)
         r = Contamination.decontaminate(r, bench, n)
       case _ =>
     }

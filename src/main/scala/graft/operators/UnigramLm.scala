@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import graft.sources.Ingestor
 
 /** Distributed unigram-LM tokenizer training + Viterbi encoding (Kudo
   * 2018, "Subword Regularization" — the SentencePiece `unigram` model,
@@ -281,7 +282,7 @@ object UnigramLm {
   def load(spark: SparkSession, dir: String): UnigramModel = {
     // explicit cast: `lit(maxPieceLen)` wrote an INT column, and a raw
     // getLong on it throws at runtime
-    val rows = spark.read.parquet(dir)
+    val rows = Ingestor.read(spark, dir)
       .select(col("piece"), col("logprob"), col("max_piece_len").cast("int"))
       .collect()
     require(rows.nonEmpty, s"empty unigram piece table at $dir")

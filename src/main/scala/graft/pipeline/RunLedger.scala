@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 
 import graft.sinks.BatchWriter
+import graft.sources.Ingestor
 
 /** Durable per-run execution stats: one parquet ledger row per pipeline
   * stage, appended at the end of every run.
@@ -69,7 +70,7 @@ class RunLedger(dir: String) {
 
   /** The full ledger, newest first — "what ran, when, how much". */
   def runs(spark: SparkSession): DataFrame =
-    spark.read.parquet(dir).orderBy(
+    Ingestor.read(spark, dir).orderBy(
       org.apache.spark.sql.functions.col("recorded_at").desc)
 
   def forPipeline(spark: SparkSession, pipeline: String): DataFrame =

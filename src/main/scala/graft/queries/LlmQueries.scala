@@ -1238,7 +1238,7 @@ object LlmQueries {
     // stack to a narrow 2-column scan; SAME oracle as
     // corpus_sample_weighted because 6-dp scores round-trip exactly
     "corpus_sample_weighted_stored" -> ((s, d) =>
-      Splits.sampleWeighted(s.read.parquet(qualityScoresFor(s, d)),
+      Splits.sampleWeighted(Ingestor.read(s, qualityScoresFor(s, d)),
           n = 50, weightCol = "quality_score")
         .orderBy("doc_id")),
 

@@ -122,7 +122,7 @@ object OperatorQueries {
           (col("o_totalprice") * 2).as("o_totalprice"),
           col("o_orderdate"), col("o_orderpriority"))
       BatchWriter.write(delta, tbl, BatchWriter.Upsert(Seq("o_orderkey")))
-      s.read.parquet(tbl).orderBy("o_orderkey")
+      Ingestor.read(s, tbl).orderBy("o_orderkey")
     }),
 
     "pipeline_e2e" -> ((s, d) => {
@@ -140,7 +140,7 @@ object OperatorQueries {
            | "persistence": {"path": "$out", "strategy": "append"}
            |}""".stripMargin
       Pipeline.runJson(s, spec)
-      s.read.parquet(out).orderBy("o_orderpriority")
+      Ingestor.read(s, out).orderBy("o_orderpriority")
     }),
 
     "data_profile" -> ((s, d) =>

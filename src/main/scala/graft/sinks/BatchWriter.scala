@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+import graft.sources.Ingestor
 
 /** Batch persistence with write strategies + write stats.
   *
@@ -119,7 +120,7 @@ object BatchWriter {
         .parquet(path)
       return (obsLong(obs, "rows"), obsLong(obs, "rows"), 0L)
     }
-    val existing = spark.read.parquet(path)
+    val existing = Ingestor.read(spark, path)
     // The inserted/updated split needs NO extra operator: the merge plan
     // already contains every number. With unique keys (the upsert
     // contract), updated = existing rows displaced by the anti join
@@ -174,5 +175,5 @@ object BatchWriter {
     }
 
   private def countRows(spark: SparkSession, path: String): Long =
-    spark.read.parquet(path).count()
+    Ingestor.read(spark, path).count()
 }

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Ingestor
 
 /** Small-file compaction for parquet table directories.
   *
@@ -56,7 +57,7 @@ object Compaction {
     val bytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
-    val df = spark.read.parquet(path)
+    val df = Ingestor.read(spark, path)
     val arranged =
       if (zOrderCols.nonEmpty) {
         val bits = math.min(21, 62 / zOrderCols.length)

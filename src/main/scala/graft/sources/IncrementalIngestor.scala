@@ -29,7 +29,7 @@ class IncrementalIngestor(registry: DurableRegistry, sourceName: String) {
     * committed mark (everything, on first run). */
   def readIncrement(spark: SparkSession, path: String,
                     watermarkCol: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Ingestor.read(spark, path)
     lastWatermark() match {
       case Some(mark) =>
         // cast the stored string mark back to the column's own type, so

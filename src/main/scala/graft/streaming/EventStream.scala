@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.dec
+import graft.sources.Ingestor
 
 /** Structured Streaming re-expression of the reference's async pipeline
   * (the reference runs Celery workers draining a Redis queue —
@@ -107,7 +108,7 @@ object EventStream {
     val kept =
       if (fs.exists(fpPath))
         graft.operators.Dedup.exactIncrement(
-          spark.read.parquet(fpDir), batch, existingIsFingerprints = true)
+          Ingestor.read(spark, fpDir), batch, existingIsFingerprints = true)
       else
         graft.operators.Dedup.exactIncrement(batch.limit(0), batch)
     val materialized = kept.cache()
@@ -172,7 +173,7 @@ object EventStream {
         // file commits leaves an existing-but-empty dir; schema
         // inference then fails — treat it exactly like a missing one,
         // so the replay contract holds for crashes INSIDE a write too
-        try Some(spark.read.parquet(dir)
+        try Some(Ingestor.read(spark, dir)
           .where(col("__batch_id") < batchId).drop("__batch_id"))
         catch { case _: org.apache.spark.sql.AnalysisException => None }
     val emptySets = graft.operators.Dedup.shingleHashSets(batch.limit(0))
@@ -242,17 +243,17 @@ object EventStream {
     def earlier(dir: String): Option[DataFrame] =
       if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) None
       else
-        try Some(spark.read.parquet(dir)
+        try Some(Ingestor.read(spark, dir)
           .where(col("__batch_id") < batchId).drop("__batch_id"))
         catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val assign = spark.read.parquet(s"$modelDir/meta")
+    val assign = Ingestor.read(spark, s"$modelDir/meta")
       .select("assign").as[Int].head()
     val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(spark.read.parquet(s"$modelDir/centroids")
+      .unsafeWrapArray(Ingestor.read(spark, s"$modelDir/centroids")
         .select("centroid_id", "v").as[(Int, Array[Double])]
         .collect().sortBy(_._1).map(_._2))
-    val baseVecs = spark.read.parquet(s"$modelDir/vectors")
-    val baseCells = spark.read.parquet(s"$modelDir/cells")
+    val baseVecs = Ingestor.read(spark, s"$modelDir/vectors")
+    val baseCells = Ingestor.read(spark, s"$modelDir/cells")
     val exVecs = earlier(vecsDir).map(baseVecs.unionByName(_)).getOrElse(baseVecs)
     val exCells = earlier(cellsDir).map(baseCells.unionByName(_)).getOrElse(baseCells)
     val (kept, keptVecs, keptCells) = graft.operators.Dedup.embeddingStateStep(
@@ -369,7 +370,7 @@ object EventStream {
       if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) None
       else
         try {
-          val all = spark.read.parquet(dir)
+          val all = Ingestor.read(spark, dir)
             .where(col("__batch_id") < batchId)
           // partition-dir discovery infers __batch_id as int — cast
           val last = all.agg(max(col("__batch_id").cast("long"))).head()
@@ -405,8 +406,8 @@ object EventStream {
   def heavyHittersFrom(spark: org.apache.spark.sql.SparkSession, stateDir: String,
                        topK: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sums = spark.read.parquet(s"$stateDir/summary")
-    val tots = spark.read.parquet(s"$stateDir/totals")
+    val sums = Ingestor.read(spark, s"$stateDir/summary")
+    val tots = Ingestor.read(spark, s"$stateDir/totals")
     val lastId = sums.agg(max(col("__batch_id").cast("long"))).head().getLong(0)
     val tot = tots.where(col("__batch_id") === lastId).head()
     val bound = tot.getAs[Long]("cum_n") / (tot.getAs[Int]("k") + 1.0)

@@ -54,6 +54,42 @@ class ConfigTransformSpec extends SparkSpec {
     assert(row.getLong(2) == 42L)
   }
 
+  test("add_columns: a literal is told apart from an expression without a failed analysis") {
+    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+    val successes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = successes.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = failures.incrementAndGet()
+    }
+    // listener events arrive in order: once a marker action's success
+    // is in, every earlier event (an earlier suite's too) has been seen
+    def flush(): Unit = {
+      val n = successes.get()
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (successes.get() <= n && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(successes.get() > n, "query listener events not flushed")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      flush()
+      failures.set(0)
+      val orders = Seq((1L, 2.5, 4), (2L, 1.0, 3)).toDF("id", "amount", "qty")
+      val out = ConfigTransform.fromJson(
+        """{"add_columns": {"src": "config_pipeline", "total": "amount * qty",
+          |  "today": "current_date", "nested": "transform(array(qty), x -> x + 1)"}}"""
+          .stripMargin)(orders)
+      val rows = out.orderBy("id").select("src", "total").as[(String, Double)].collect().toSeq
+      assert(rows == Seq(("config_pipeline", 10.0), ("config_pipeline", 3.0)))
+      assert(out.schema("today").dataType.typeName == "date")
+      assert(out.where($"id" === 1).select("nested").as[Seq[Int]].head() == Seq(5))
+      flush()
+      assert(failures.get() == 0)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("map transformation sends unmapped values to NULL (pandas .map)") {
     val out = ConfigTransform.fromJson(
       """{"transformations": [{"type": "map", "column": "status",

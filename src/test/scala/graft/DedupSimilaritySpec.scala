@@ -1599,42 +1599,16 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(graft.functions.resolveRows(chain, graft.functions.autoRows) == -1L)
     // constructing the lazy builders over the chain must fire ZERO
     // Spark jobs (minhashNearDups is excluded: its localCheckpoint is
-    // eager by contract). A sentinel job flushes the async listener
-    // bus: events are delivered in order, so once the sentinel's start
-    // event arrives any earlier construction-time job would have too.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // the listener bus is async and delivers IN ORDER, so straggler
-      // events from the cheapRows counts above may still arrive after
-      // attach. Sentinel 1 + a settle loop drains everything up to it;
-      // any event counted after the drained baseline must then be a
-      // construction-time job or sentinel 2.
-      def settle(): Int = {
-        var last = -1
-        while (jobs.get() != last) { last = jobs.get(); Thread.sleep(250) }
-        last
-      }
-      // sentinels are RDD counts: exactly ONE job each (a DataFrame
-      // count under AQE materializes the shuffle stage as its own job)
-      spark.sparkContext.parallelize(Seq(1)).count() // sentinel 1
-      val n0 = settle()
+    // eager by contract)
+    val fired = jobsDuring {
       Dedup.repeatedSpans(chain, n = 8)
       Dedup.applySpanMask(chain, Dedup.repeatedSpanMask(chain, n = 8), n = 8)
       Dedup.minhashCandidates(chain)
       Splits.leakageSafeFromLabels(chain,
         Seq((1L, 1L)).toDF("id", "cluster_id"), "doc_id")
-      spark.sparkContext.parallelize(Seq(1)).count() // sentinel 2
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < n0 + 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(settle() == n0 + 1,
-        "a builder ran a Spark job at construction time over an uncached chain")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(fired == 0,
+      "a builder ran a Spark job at construction time over an uncached chain")
     // and the chain-built feed still verifies correctly when executed
     // (pinned plan, same rows as the bare-scan build)
     val viaChain = Dedup.minhashCandidates(scan.where(col("doc_id") >= 0))

@@ -129,52 +129,13 @@ class IvfTrainingSpec extends SparkSpec {
     } finally e.unpersist(false)
   }
 
-  /** Jobs fired and shuffle bytes written by `body`, counted over its
-    * own job group. A sentinel job in a second group flushes the async
-    * listener bus: events arrive in order, so once the sentinel has
-    * ended, every event of `body` has been seen. */
-  private def jobsAndShuffleBytes(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val group = s"ivf-train-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) { jobs.incrementAndGet(); js.stageIds.foreach(stages.add(_)) }
-        else if (g == s"$group-end") sentinelJob.set(js.jobId)
-      }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stages.contains(s.stageInfo.stageId))
-          bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (je.jobId == sentinelJob.get()) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "training under test")
-      body
-      sc.setJobGroup(s"$group-end", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    (jobs.get(), bytes.get())
-  }
-
   test("Lloyd training: at most iterations + 2 jobs and no shuffle") {
     val e = Similarity.prepared(input)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       e.count()
       for (r <- Seq(1, 3, 5); k <- Seq(0, 12)) {
-        val (jobs, shuffled) = jobsAndShuffleBytes {
+        val (jobs, shuffled) = sparkWorkDuring {
           Similarity.trainIvfCentroids(e, k, iterations = r)
         }
         // k = 0 adds the sizing count to the seed pass and the rounds
@@ -182,7 +143,7 @@ class IvfTrainingSpec extends SparkSpec {
         assert(shuffled == 0L, s"r=$r k=$k: $shuffled shuffle bytes")
       }
       // IVF-PQ: coarse count + seeds + 3 rounds, then PQ seeds + 3 rounds
-      val (jobs, shuffled) = jobsAndShuffleBytes {
+      val (jobs, shuffled) = sparkWorkDuring {
         Similarity.trainIvfPq(e, 0, 4, 8)
       }
       assert(jobs <= 9 && shuffled == 0L, s"IVF-PQ: $jobs jobs, $shuffled bytes")

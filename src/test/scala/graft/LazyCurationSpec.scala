@@ -38,31 +38,6 @@ class LazyCurationSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  /** Jobs started while `f` runs. The listener bus is async but delivers
-    * in order, so a sentinel job before and after brackets exactly the
-    * jobs `f` fired (the sentinels are RDD counts: one job each). */
-  private def jobsDuring(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settle(): Int = {
-      var last = -1
-      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(250) }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.parallelize(Seq(1)).count()
-      val n0 = settle()
-      f
-      spark.sparkContext.parallelize(Seq(1)).count()
-      settle() - n0 - 1
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("curation builders fire only their checkpoint and dispatch jobs at construction") {
     stateDir // the state build is not part of any probe's construction
     // per builder: its input checkpoints plus the dispatch aggregates
