@@ -105,8 +105,7 @@ object StreamBench {
     } {
       // decompose the final batch: probe+verify alone vs full replay
       val lastB = nBatches - 1
-      def earlier(dir: String) = Ingestor.read(spark, dir)
-        .where(col("__batch_id") < lastB).drop("__batch_id")
+      def earlier(dir: String) = EventStream.earlierBatches(spark, dir, lastB).get
       val (_, probeMs) = timed {
         val (kept, ks, kb) = Dedup.nearDupStateStep(
           earlier(s"$ndState/shingle_sets"), earlier(s"$ndState/band_buckets"),
@@ -128,21 +127,13 @@ object StreamBench {
         s"$base/embmodel", s"$base/em/corpus", emState, 0.45)
     } {
       val lastB = nBatches - 1
-      def earlier(dir: String) = Ingestor.read(spark, dir)
-        .where(col("__batch_id") < lastB).drop("__batch_id")
-      val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(Ingestor.read(spark, s"$base/embmodel/centroids")
-          .select("centroid_id", "v").as[(Int, Array[Double])]
-          .collect().sortBy(_._1).map(_._2))
-      val assign = Ingestor.read(spark, s"$base/embmodel/meta")
-        .select("assign").as[Int].head()
-      val exVecs = Ingestor.read(spark, s"$base/embmodel/vectors")
-        .unionByName(earlier(s"$emState/vectors"))
-      val exCells = Ingestor.read(spark, s"$base/embmodel/cells")
-        .unionByName(earlier(s"$emState/cells"))
+      def earlier(dir: String) = EventStream.earlierBatches(spark, dir, lastB).get
+      val model = Dedup.storedEmbeddingModel(spark, s"$base/embmodel")
+      val exVecs = model.vectors.unionByName(earlier(s"$emState/vectors"))
+      val exCells = model.cells.unionByName(earlier(s"$emState/cells"))
       val (_, probeMs) = timed {
         val (kept, kv, kc) = Dedup.embeddingStateStep(exVecs, exCells,
-          centroids, embStreamSide(lastB), 0.45, assign)
+          model.centroids, embStreamSide(lastB), 0.45, model.assign)
         kept.count(); kv.count(); kc.count()
       }
       val (_, replayMs) = timed {

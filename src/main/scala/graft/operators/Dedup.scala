@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import graft.functions._
 import graft.sources.Ingestor
 
@@ -2134,9 +2133,7 @@ object Dedup {
     Similarity.cellAssignments(e, centroids, assign)
       .write.mode("overwrite").parquet(s"$dir/cells")
     e.unpersist(false)
-    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("centroid_id", "v")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    Similarity.writeCentroids(spark, centroids, s"$dir/centroids")
     // meta LAST: completeness marker + the parameters a probe must reuse
     Seq((k, assign, centroids.head.length, n))
       .toDF("k", "assign", "dim", "n_vecs")
@@ -2157,18 +2154,31 @@ object Dedup {
     * oracle SF. Increment ids must be disjoint from the corpus's. */
   def embeddingIncrementStored(incoming: DataFrame, dir: String,
                                threshold: Double = 0.45): DataFrame = {
-    val spark = incoming.sparkSession
-    import spark.implicits._
-    val assign = Ingestor.read(spark, s"$dir/meta").select("assign").as[Int].head()
-    val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(Ingestor.read(spark, s"$dir/centroids")
-        .select("centroid_id", "v").as[(Int, Array[Double])]
-        .collect().sortBy(_._1).map(_._2))
-    val (survivors, _, _) = embeddingStateStep(
-      Ingestor.read(spark, s"$dir/vectors"),
-      Ingestor.read(spark, s"$dir/cells"),
-      centroids, incoming, threshold, assign, materializeState = false)
+    val model = storedEmbeddingModel(incoming.sparkSession, dir)
+    val (survivors, _, _) = embeddingStateStep(model.vectors, model.cells,
+      model.centroids, incoming, threshold, model.assign, materializeState = false)
     survivors
+  }
+
+  /** A stored embedding-dedup model ([[buildEmbeddingDedupState]]) as a
+    * probe reads it: `assign` from `meta`, the centroid matrix (the
+    * only driver-side load), and the corpus vector and cell tables as
+    * parquet scans. */
+  private[graft] case class StoredEmbeddingModel(assign: Int, centroids: Seq[Array[Double]],
+                                                 vectors: DataFrame, cells: DataFrame)
+
+  /** Load a stored embedding-dedup model — shared by
+    * [[embeddingIncrementStored]], the streaming embedding sink and its
+    * benchmark. */
+  private[graft] def storedEmbeddingModel(spark: org.apache.spark.sql.SparkSession,
+                                          dir: String): StoredEmbeddingModel = {
+    import spark.implicits._
+    StoredEmbeddingModel(
+      Ingestor.read(spark, s"$dir/meta").select("assign").as[Int].head(),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        Similarity.readCentroids(spark, s"$dir/centroids")),
+      Ingestor.read(spark, s"$dir/vectors"),
+      Ingestor.read(spark, s"$dir/cells"))
   }
 
   /** Build and PERSIST near-dup (minhash) dedup state for an
@@ -2207,24 +2217,11 @@ object Dedup {
     sets.unpersist(false)
     val n = written.get("n").asInstanceOf[Long]
     // one aggregate over the written table, reading only its bucket column
-    val occ = bucketOccupancy(
-      spark.read.schema(storedBucketsSchema).parquet(s"$dir/band_buckets"))
+    val occ = bucketOccupancy(Ingestor.read(spark, s"$dir/band_buckets"))
     Seq((k, bands, n, occ.maxOccupancy, occ.bucketRows))
       .toDF("k", "bands", "n_docs", "max_occupancy", "bucket_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
-
-  // The schemas [[buildNearDupState]] writes, so a probe reads the
-  // state without a schema-inference job. A meta written before the
-  // occupancy columns existed reads them as null.
-  private val storedSetsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("shash", ArrayType(LongType))))
-  private val storedBucketsSchema = StructType(Seq(
-    StructField("id", LongType), StructField("bucket", IntegerType)))
-  private val storedMetaSchema = StructType(Seq(
-    StructField("k", IntegerType), StructField("bands", IntegerType),
-    StructField("n_docs", LongType), StructField("max_occupancy", LongType),
-    StructField("bucket_rows", LongType)))
 
   /** Build and PERSIST the near-dup CLOSURE state — the stored-model
     * form of [[nearDupClusters]], i.e. the train-once/probe-forever
@@ -2285,24 +2282,26 @@ object Dedup {
     * and only candidates' shingle sets are fetched for the exact
     * Jaccard verify. Per-run cost tracks the increment and its bucket
     * collisions; the corpus contributes two parquet-streamed joins and
-    * zero recomputation. The stored tables are read with the schemas
-    * [[buildNearDupState]] wrote, and the witness dispatch takes the
-    * stored occupancy from `meta` (a meta that predates it falls back
-    * to the aggregate), so the corpus side costs one build-time job:
-    * the `meta` read. Same
+    * zero recomputation. The stored tables are read through
+    * [[Ingestor.read]] (schemas from the footers, no job), and the
+    * witness dispatch takes the stored occupancy from `meta` (a meta
+    * whose schema predates those columns falls back to the aggregate),
+    * so the corpus side costs one build-time job: the `meta` read. Same
     * duplicate contract as [[nearDupIncrement]] (shared
     * [[nearDupStateStep]] core), so the all-pairs oracle transfers. */
   def nearDupIncrementStored(incoming: DataFrame, dir: String,
                              threshold: Double = 0.8): DataFrame = {
     val spark = incoming.sparkSession
-    val meta = spark.read.schema(storedMetaSchema).parquet(s"$dir/meta").head()
+    val metaDf = Ingestor.read(spark, s"$dir/meta")
+    val meta = metaDf.head()
     val occupancy =
-      if (meta.isNullAt(3) || meta.isNullAt(4)) None
-      else Some(BucketOccupancy(meta.getLong(3), meta.getLong(4)))
+      if (!Seq("max_occupancy", "bucket_rows").forall(metaDf.columns.contains)) None
+      else Some(BucketOccupancy(meta.getAs[Long]("max_occupancy"),
+        meta.getAs[Long]("bucket_rows")))
     val (survivors, _, _) = nearDupStateStep(
-      spark.read.schema(storedSetsSchema).parquet(s"$dir/shingle_sets"),
-      spark.read.schema(storedBucketsSchema).parquet(s"$dir/band_buckets"),
-      incoming, threshold, meta.getInt(0), meta.getInt(1),
+      Ingestor.read(spark, s"$dir/shingle_sets"),
+      Ingestor.read(spark, s"$dir/band_buckets"),
+      incoming, threshold, meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
       materializeState = false, corpusOccupancy = occupancy)
     survivors
   }

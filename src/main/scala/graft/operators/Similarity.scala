@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.sources.Ingestor
@@ -202,16 +202,28 @@ object Similarity {
   }
 
   /** (vec_id, v, norm) -> one row per (table_idx, bucket). The bucket is
-    * the integer formed by the sign bits of the hyperplane projections. */
-  def lshBuckets(e: DataFrame, vecCol: String, dim: Int = 64,
-                 tables: Int = 4, bitsPerTable: Int = 6,
-                 seed: Long = 0x517eL): DataFrame = {
+    * the integer formed by the sign bits of the hyperplane projections.
+    * The planes cover any vector width without reading it: coordinates
+    * 0-63 of plane (table, bit) are seeded Gaussian draws, and each
+    * coordinate d >= 64 is xxhash64(seed, table, bit, d) scaled to
+    * [-1, 1), computed inside the projection. */
+  def lshBuckets(e: DataFrame, vecCol: String, tables: Int = 4,
+                 bitsPerTable: Int = 6, seed: Long = 0x517eL): DataFrame = {
+    val drawn = 64
     val rnd = new scala.util.Random(seed)
     val planes: Seq[Seq[Array[Double]]] =
-      Seq.fill(tables)(Seq.fill(bitsPerTable)(Array.fill(dim)(rnd.nextGaussian())))
-    val bucketCols = planes.map { tablePlanes =>
+      Seq.fill(tables)(Seq.fill(bitsPerTable)(Array.fill(drawn)(rnd.nextGaussian())))
+    val v = col(vecCol)
+    // + 0.0 on a vector no wider than the drawn head, so those buckets
+    // are exactly the head-only projection's
+    def tailDot(table: Int, bit: Int): Column =
+      aggregate(transform(slice(v, lit(drawn + 1), size(v)), (x, i) =>
+        x * (shiftright(xxhash64(lit(seed), lit(table), lit(bit), i + drawn), 11)
+          .cast("double") / (1L << 52).toDouble)),
+        lit(0.0), _ + _)
+    val bucketCols = planes.zipWithIndex.map { case (tablePlanes, t) =>
       tablePlanes.zipWithIndex.map { case (p, i) =>
-        when(dotProduct(col(vecCol), typedlit(p)) >= 0, 1 << i).otherwise(0)
+        when(dotProduct(v, typedlit(p)) + tailDot(t, i) >= 0, 1 << i).otherwise(0)
       }.reduce(_ + _)
     }
     e.select(col("*"),
@@ -242,8 +254,8 @@ object Similarity {
     * left-to-right in its own accumulator, so every value is
     * bit-identical to the one-centroid-at-a-time loop — blocking only
     * reorders work BETWEEN independent dots, never within one.
-    * Shared by the Lloyd assignment, [[cellAssignments]] and
-    * [[assignToCentroid]]; equivalence spec-pinned. */
+    * Every sum starts at +0.0, so no dot is ever -0.0. Called only by
+    * [[nearestCells]]; equivalence spec-pinned. */
   private[graft] def dotsBlocked(v: Array[Double],
                                  cents: Array[Array[Double]],
                                  dots: Array[Double]): Unit = {
@@ -271,6 +283,53 @@ object Similarity {
       dots(ci) = s
       ci += 1
     }
+  }
+
+  /** The one nearest-cell kernel: scores `v` against every centroid
+    * ([[dotsBlocked]] into `dots`, length >= k) and writes the ids of
+    * its best `cells.length` cells into `cells`, best first; returns
+    * how many it wrote. Every IVF consumer picks its cells here — the
+    * Lloyd fold, [[cellAssignments]], the nearest-cell pass
+    * ([[knnIvf]]'s corpus, [[trainIvfPq]], [[extendIvfPqIndex]]) and
+    * the probe pass of both searches — so none can disagree on a cell.
+    *
+    * The rule (pinned for every consumer in IvfTrainingSpec):
+    *  - the higher dot ranks first, and an exact tie goes to the HIGHER
+    *    centroid id;
+    *  - ties compare with IEEE `==`, so -0.0 and 0.0 are one score
+    *    (and [[dotsBlocked]] never yields -0.0: a vector orthogonal to
+    *    a centroid scores +0.0 whatever the signs of its zero products);
+    *  - a NaN dot never ranks, so a vector with a NaN coordinate (all
+    *    its dots NaN) gets no cell: it adds to no Lloyd sum, lands in no
+    *    cell table or index, and probes nothing.
+    * So fewer than `cells.length` ids come back only when k is smaller
+    * or dots are NaN. The ranking is an insertion into `cells` with no
+    * allocation: materialising and sorting k boxed (score, id) tuples
+    * per row measured 79.7 s for ONE assignment pass at k=3125 over
+    * 200k rows, all of it allocation. */
+  private[graft] def nearestCells(v: Array[Double], cents: Array[Array[Double]],
+                                  dots: Array[Double], cells: Array[Int]): Int = {
+    dotsBlocked(v, cents, dots)
+    val a = cells.length
+    var n = 0
+    var ci = 0
+    while (ci < cents.length) {
+      val s = dots(ci)
+      if (!s.isNaN) {
+        // ids arrive ascending, so an equal score moves above every
+        // ranked (lower) id
+        var pos = n
+        while (pos > 0 && s >= dots(cells(pos - 1))) pos -= 1
+        if (pos < a) {
+          if (n < a) n += 1
+          var q = n - 1
+          while (q > pos) { cells(q) = cells(q - 1); q -= 1 }
+          cells(pos) = ci
+        }
+      }
+      ci += 1
+    }
+    n
   }
 
   /** IVF coarse quantizer: `k` centroids (0 = [[autoCells]] of the
@@ -311,26 +370,16 @@ object Similarity {
       // the first pass (the count when k = 0, else the seed pass) also
       // materialises the cache
       val seeds = seedRows(rows, if (k > 0) k else autoCells(rows.count()))
-      // fail here, not in assignToCentroid: an empty corpus would
-      // otherwise surface as an opaque array()-getItem analysis error
       require(seeds.nonEmpty, "cannot train IVF centroids on an empty corpus")
       val vecs = rows.map(_._3)
       var centroids = seeds
       (0 until iterations).foreach { _ =>
         centroids = lloydRound(vecs, centroids) { (cents, sums, counts) =>
           val dots = new Array[Double](cents.length)
-          v => {
-            // broadcast-matrix argmax in a tight primitive loop; ties
-            // resolve toward the higher centroid id, matching
-            // [[assignToCentroid]]
-            dotsBlocked(v, cents, dots)
-            var best = 0; var bestS = Double.NegativeInfinity; var ci = 0
-            while (ci < cents.length) {
-              if (dots(ci) >= bestS) { bestS = dots(ci); best = ci }
-              ci += 1
-            }
-            counts(best) += 1
-            val s = sums(best)
+          val cell = new Array[Int](1)
+          v => if (nearestCells(v, cents, dots, cell) > 0) {
+            counts(cell(0)) += 1
+            val s = sums(cell(0))
             var i = 0
             while (i < s.length) { s(i) += v(i); i += 1 }
           }
@@ -382,62 +431,54 @@ object Similarity {
       if (counts(c) == 0) cur(c) else sums(c).map(_ / counts(c)))
   }
 
-  /** Top-`nprobe` centroid scores as an expression over broadcast
-    * centroid literals — for PROBE-sized relations only (a handful of
-    * query rows). On corpus-sized relations the array-of-structs +
-    * sort_array tree is a trap: Catalyst's constraint propagation can
-    * clone it into an `isnotnull` DataFilter at the scan, and in
-    * filter context it evaluates INTERPRETED per row — measured 40 s
-    * of `knn_ivf`'s 44 s at sf10 before [[assignToCentroid]] switched
-    * to the typed pass below. */
-  private def centroidScores(vecCol: Column, centroids: Seq[Array[Double]]): Column =
-    array(centroids.zipWithIndex.map { case (c, i) =>
-      struct(dotProduct(vecCol, typedlit(c)).as("score"), lit(i).as("centroid_id"))
-    }: _*)
-
-  /** Nearest-centroid assignment for CORPUS-sized relations: one typed
-    * pass with the k×dim centroid matrix on a broadcast and a tight
-    * argmax loop per row, every input column carried through. Ties
-    * break toward the HIGHER centroid id — identical to the descending
-    * (score, centroid_id) struct sort the probe-side expression form
-    * uses, so models and search results are unchanged. */
-  def assignToCentroid(e: DataFrame, centroids: Seq[Array[Double]]): DataFrame = {
+  /** Each vector's nearest cell ([[nearestCells]]) in one typed pass
+    * over (vec_id, v, norm), the matrix on a broadcast: rows (vec_id,
+    * centroid_id, v, norm), or with `residual` (vec_id, centroid_id, r,
+    * norm), r = v minus its centroid ([[residualOf]]) — the vector PQ
+    * encodes. A vector with no cell emits no row. */
+  private[graft] def nearestCell(e: DataFrame, cents: Array[Array[Double]],
+                                 residual: Boolean): DataFrame = {
     val spark = e.sparkSession
-    val bc = spark.sparkContext.broadcast(centroids.toArray)
-    val vIdx = e.schema.fieldIndex("v")
-    val outSchema = e.schema.add("centroid_id",
-      org.apache.spark.sql.types.IntegerType, nullable = false)
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    e.mapPartitions { it =>
-      val cents = bc.value
-      val dots = new Array[Double](cents.length)
-      it.map { row =>
-        val vSeq = row.getSeq[Double](vIdx)
-        val v = new Array[Double](vSeq.length)
-        var d = 0
-        while (d < v.length) { v(d) = vSeq(d); d += 1 }
-        dotsBlocked(v, cents, dots)
-        var best = 0
-        var bestS = Double.NegativeInfinity
-        var ci = 0
-        while (ci < cents.length) {
-          if (dots(ci) >= bestS) { bestS = dots(ci); best = ci }
-          ci += 1
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
+    e.select(col("vec_id"), col("v"), col("norm")).as[(Long, Array[Double], Double)]
+      .mapPartitions { it =>
+        val cs = bc.value
+        val dots = new Array[Double](cs.length)
+        val cell = new Array[Int](1)
+        it.flatMap { case (id, v, norm) =>
+          if (nearestCells(v, cs, dots, cell) == 0) None
+          else Some((id, cell(0), if (residual) residualOf(v, cs(cell(0))) else v, norm))
         }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ best)
       }
-    }(enc)
+      .toDF("vec_id", "centroid_id", if (residual) "r" else "v", "norm")
+  }
+
+  /** The probe pass [[knnIvf]] and [[pqSearch]] share: each query
+    * row's top-`nprobe` cells by [[nearestCells]], one row per probe:
+    * (q_id, qv, qnorm, centroid_id, q_dot_c). */
+  private[graft] def probeCells(q: DataFrame, cents: Array[Array[Double]],
+                                nprobe: Int)
+      : Dataset[(Long, Array[Double], Double, Int, Double)] = {
+    val spark = q.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
+    q.select(col("vec_id"), col("v"), col("norm")).as[(Long, Array[Double], Double)]
+      .mapPartitions { it =>
+        val cs = bc.value
+        val dots = new Array[Double](cs.length)
+        val cells = new Array[Int](math.max(0, math.min(nprobe, cs.length)))
+        it.flatMap { case (id, v, norm) =>
+          val n = nearestCells(v, cs, dots, cells)
+          Array.tabulate(n)(i => (id, v, norm, cells(i), dots(cells(i))))
+        }
+      }
   }
 
   /** (vec_id, cell) rows for each vector's top-`assign` centroid cells
-    * by dot product — the typed (broadcast-matrix) form of cell
-    * assignment. The expression form ([[assignToCentroid]]) builds an
-    * array of k struct literals, which is codegen-friendly for the
-    * k≤64 of ANN coarse quantizers but would explode the generated
-    * code at the hundreds-to-thousands of cells clustered near-dup
-    * uses; here the k x dim matrix rides one broadcast and each task
-    * scores rows in a tight loop. Ties break toward the HIGHER
-    * centroid_id, matching [[knnIvf]]'s descending struct sort. */
+    * ([[nearestCells]]): one typed pass with the k x dim matrix on a
+    * broadcast, so the cost is the same at the hundreds-to-thousands
+    * of cells clustered near-dup uses as at an ANN quantizer's 16. */
   def cellAssignments(e: DataFrame, centroids: Seq[Array[Double]],
                       assign: Int): DataFrame = {
     val spark = e.sparkSession
@@ -446,41 +487,14 @@ object Similarity {
     e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
       .mapPartitions { it =>
         val cents = bc.value
-        val a = math.min(assign, cents.length)
         val dots = new Array[Double](cents.length)
-        // top-`assign` insertion into two primitive arrays instead of
-        // materialising + sorting k boxed (score, id) tuples per row:
-        // the tuple form measured 79.7 s for ONE assignment pass at
-        // k=3125/200k rows where the training loop's tight-loop argmax
-        // did a full Lloyd round in ~10 s — all of it allocation, not
-        // arithmetic. Order kept identical to sortBy(-s, -ci): a later
-        // equal-score centroid (higher ci) ranks ABOVE an earlier one.
-        // Dots come from the blocked kernel ([[dotsBlocked]] — values
-        // bit-identical, 4 accumulator chains per pass).
-        it.map { case (id, v) =>
-          dotsBlocked(v, cents, dots)
-          val bestS = new Array[Double](a)
-          val bestC = new Array[Int](a)
-          java.util.Arrays.fill(bestS, Double.NegativeInfinity)
-          java.util.Arrays.fill(bestC, -1)
-          var ci = 0
-          while (ci < cents.length) {
-            val s = dots(ci)
-            var pos = a
-            while (pos > 0 && (s > bestS(pos - 1) ||
-              (s == bestS(pos - 1) && ci > bestC(pos - 1)))) pos -= 1
-            if (pos < a) {
-              var q = a - 1
-              while (q > pos) { bestS(q) = bestS(q - 1); bestC(q) = bestC(q - 1); q -= 1 }
-              bestS(pos) = s; bestC(pos) = ci
-            }
-            ci += 1
-          }
-          (id, bestC.filter(_ >= 0))
+        val cells = new Array[Int](math.min(assign, cents.length))
+        it.flatMap { case (id, v) =>
+          val n = nearestCells(v, cents, dots, cells)
+          Array.tabulate(n)(i => (id, cells(i)))
         }
       }
-      .toDF("vec_id", "cells")
-      .select(col("vec_id"), explode(col("cells")).as("cell"))
+      .toDF("vec_id", "cell")
   }
 
   /** IVF ANN top-k: corpus partitioned into centroid cells; each query
@@ -503,14 +517,13 @@ object Similarity {
              corpusFilter: Column = null): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = prepared(emb)
-    val centroids = trainIvfCentroids(e, centroidsK)
-    val corpus = assignToCentroid(
-      if (corpusFilter == null) e else prepared(emb.where(corpusFilter)), centroids)
-    val probes = e.where(isQuery)
-      .withColumn("probe",
-        explode(slice(sort_array(centroidScores(col("v"), centroids), asc = false), 1, nprobe)))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qnorm"),
-        col("probe.centroid_id").as("centroid_id"))
+    val centroids = trainIvfCentroids(e, centroidsK).toArray
+    val corpus = nearestCell(
+      if (corpusFilter == null) e else prepared(emb.where(corpusFilter)),
+      centroids, residual = false)
+    val probes = probeCells(e.where(isQuery), centroids, nprobe)
+      .toDF("q_id", "qv", "qnorm", "centroid_id", "q_dot_c")
+      .drop("q_dot_c")
     val scored = probes.join(corpus, "centroid_id")
       .where(col("q_id") =!= col("vec_id"))
       .withColumn("cos_sim", round(
@@ -567,6 +580,32 @@ object Similarity {
     best
   }
 
+  /** r = v - c over c's width: the residual a PQ code encodes. */
+  private def residualOf(v: Array[Double], c: Array[Double]): Array[Double] = {
+    val r = new Array[Double](c.length)
+    var d = 0
+    while (d < r.length) { r(d) = v(d) - c(d); d += 1 }
+    r
+  }
+
+  /** PQ-encode (vec_id, centroid_id, r, norm) residual rows against
+    * `cb`: each subspace's nearest code ([[nearestSub]]), as (vec_id,
+    * centroid_id, codes, norm). The one encoder of the build
+    * ([[trainIvfPq]]) and of index increments ([[extendIvfPqIndex]]),
+    * so their codes are bit-compatible. */
+  private def pqEncode(residuals: DataFrame,
+                       cb: Array[Array[Array[Double]]]): DataFrame = {
+    val spark = residuals.sparkSession
+    import spark.implicits._
+    val bcCb = spark.sparkContext.broadcast(cb)
+    val subDim = cb(0)(0).length
+    residuals.as[(Long, Int, Array[Double], Double)].map { case (id, cid, r, norm) =>
+      val books = bcCb.value
+      (id, cid, Array.tabulate(books.length)(i => nearestSub(r, i * subDim, books(i), subDim)),
+        norm)
+    }.toDF("vec_id", "centroid_id", "codes", "norm")
+  }
+
   /** A trained IVF-PQ model: coarse centroid matrix, per-subspace
     * codebooks, and the encoded codes table — a lazy plan over the
     * checkpointed residuals, whose blocks the ContextCleaner frees once
@@ -586,23 +625,11 @@ object Similarity {
                          kSub: Int): IvfPqModel = {
     val spark = e.sparkSession
     import spark.implicits._
-    val centroids = trainIvfCentroids(e, centroidsK)
-    val centArr = centroids.toArray
+    val centArr = trainIvfCentroids(e, centroidsK).toArray
     val dim = centArr(0).length
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val subDim = dim / m
-    val bcCent = spark.sparkContext.broadcast(centArr)
-    val residuals = assignToCentroid(e, centroids)
-      .select(col("vec_id"), col("centroid_id"), col("v"), col("norm"))
-      .as[(Long, Int, Array[Double], Double)]
-      .map { case (id, cid, v, norm) =>
-        val c = bcCent.value(cid)
-        val r = new Array[Double](dim)
-        var d = 0
-        while (d < dim) { r(d) = v(d) - c(d); d += 1 }
-        (id, cid, r, norm)
-      }
-      .toDF("vec_id", "centroid_id", "r", "norm")
+    val residuals = nearestCell(e, centArr, residual = true)
       // lazy: the plan has no exchange, so nothing runs here, and the
       // seed pass below fills the checkpoint that every later pass reads
       .localCheckpoint(eager = false)
@@ -617,15 +644,7 @@ object Similarity {
     val init = Array.tabulate(m, kSub)((i, j) =>
       seeds(j % seeds.length).slice(i * subDim, (i + 1) * subDim))
     val cb = trainPqCodebooks(rows.map(_._3), init, m, kSub, subDim)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val codes = residuals
-      .select(col("vec_id"), col("centroid_id"), col("r"), col("norm"))
-      .as[(Long, Int, Array[Double], Double)]
-      .map { case (id, cid, r, norm) =>
-        (id, cid, Array.tabulate(m)(i => nearestSub(r, i * subDim, bcCb.value(i), subDim)), norm)
-      }
-      .toDF("vec_id", "centroid_id", "codes", "norm")
-    IvfPqModel(centArr, cb, codes)
+    IvfPqModel(centArr, cb, pqEncode(residuals, cb))
   }
 
   /** IVF-PQ ANN top-k: IVF coarse cells bound the candidate set
@@ -634,8 +653,8 @@ object Similarity {
     * the difference between shuffling the corpus matrix and shuffling
     * ~1/32nd of it. Scoring uses the inner-product decomposition
     * dot(q, v) ≈ dot(q, centroid_cell) + Σᵢ LUTᵢ[codeᵢ] where
-    * LUTᵢ[j] = dot(q_subᵢ, codebookᵢⱼ) is computed ONCE per query (not
-    * per candidate), then the top `refine`·k approx candidates per
+    * LUTᵢ[j] = dot(q_subᵢ, codebookᵢⱼ) is computed once per probed
+    * cell in the probe pass (never per candidate), then the top `refine`·k approx candidates per
     * query are re-ranked with exact cosine so the output quality
     * tracks the candidate set, not the quantization error. The vector
     * dimension comes from the data; `m` must divide it. `centroidsK`
@@ -672,32 +691,18 @@ object Similarity {
     import spark.implicits._
     val m = cb.length
     val kSub = cb(0).length
-    val dim = centArr(0).length
-    val subDim = dim / m
-    val bcCent = spark.sparkContext.broadcast(centArr)
+    val subDim = cb(0)(0).length
     val bcCb = spark.sparkContext.broadcast(cb)
-    // query side: nprobe probes + the per-query LUT, one typed pass
-    val probes = e.where(isQuery)
-      .select(col("vec_id"), col("v"), col("norm"))
-      .as[(Long, Array[Double], Double)]
-      .flatMap { case (qid, qv, qnorm) =>
-        val lut: Seq[Seq[Double]] = (0 until m).map { i =>
-          (0 until kSub).map { j =>
-            val c = bcCb.value(i)(j); var s = 0.0; var d = 0
-            while (d < subDim) { s += qv(i * subDim + d) * c(d); d += 1 }
-            s
-          }
+    // query side: the shared probe pass, each probe carrying its
+    // query's LUT
+    val probes = probeCells(e.where(isQuery), centArr, nprobe)
+      .map { case (qid, qv, qnorm, ci, qDotC) =>
+        val lut = Array.tabulate(m, kSub) { (i, j) =>
+          val c = bcCb.value(i)(j); var s = 0.0; var d = 0
+          while (d < subDim) { s += qv(i * subDim + d) * c(d); d += 1 }
+          s
         }
-        val cellScores = bcCent.value.indices.map { ci =>
-          val c = bcCent.value(ci); var s = 0.0; var d = 0
-          while (d < dim) { s += qv(d) * c(d); d += 1 }
-          (s, ci)
-        }
-        // tie-break toward the HIGHER centroid_id to match knnIvf's
-        // sort_array(struct(score, centroid_id), asc=false) ordering —
-        // on an exact score tie both paths must probe the same cells
-        cellScores.sortBy { case (s, ci) => (-s, -ci) }.take(nprobe)
-          .map { case (qDotC, ci) => (qid, qnorm, ci, qDotC, lut) }
+        (qid, qnorm, ci, qDotC, lut)
       }
       .toDF("q_id", "qnorm", "centroid_id", "q_dot_c", "lut")
     val scored = probes.join(codes, "centroid_id")
@@ -743,9 +748,7 @@ object Similarity {
     val model = trainIvfPq(e, centroidsK, m, kSub)
     model.codes.write.mode("overwrite").parquet(s"$dir/codes")
     e.unpersist(false)
-    model.centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("centroid_id", "v")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    writeCentroids(spark, model.centroids.toSeq, s"$dir/centroids")
     model.codebooks.zipWithIndex.flatMap { case (codebook, i) =>
       codebook.zipWithIndex.map { case (v, j) => (i, j, v.toSeq) }
     }.toSeq.toDF("subspace", "code", "v")
@@ -781,40 +784,8 @@ object Similarity {
     * searches ship for it. */
   def extendIvfPqIndex(emb: DataFrame, isNew: Column, dir: String,
                        incrementId: Long): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val (centArr, cb) = loadIvfPqModel(spark, dir)
-    val dim = centArr(0).length
-    val m = cb.length
-    val subDim = dim / m
-    val bcCent = spark.sparkContext.broadcast(centArr)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    prepared(emb.where(isNew))
-      .select(col("vec_id"), col("v"), col("norm"))
-      .as[(Long, Array[Double], Double)]
-      .mapPartitions { it =>
-        val cents = bcCent.value
-        val books = bcCb.value
-        it.map { case (id, v, norm) =>
-          // same tie-break as assignToCentroid / cellAssignments:
-          // highest dot product, ties toward the HIGHER centroid_id
-          var best = 0; var bestS = Double.NegativeInfinity; var ci = 0
-          while (ci < cents.length) {
-            val c = cents(ci); var s = 0.0; var d = 0
-            while (d < dim) { s += v(d) * c(d); d += 1 }
-            if (s > bestS || (s == bestS && ci > best)) { bestS = s; best = ci }
-            ci += 1
-          }
-          val cvec = cents(best)
-          val r = new Array[Double](dim)
-          var d = 0
-          while (d < dim) { r(d) = v(d) - cvec(d); d += 1 }
-          (id, best,
-            Array.tabulate(m)(i => nearestSub(r, i * subDim, books(i), subDim)),
-            norm)
-        }
-      }
-      .toDF("vec_id", "centroid_id", "codes", "norm")
+    val (centArr, cb) = loadIvfPqModel(emb.sparkSession, dir)
+    pqEncode(nearestCell(prepared(emb.where(isNew)), centArr, residual = true), cb)
       .withColumn("__increment_id", lit(incrementId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -950,6 +921,26 @@ object Similarity {
     pqSearch(prepared(emb), codes, centArr, cb, isQuery, k, nprobe, refine)
   }
 
+  /** The stored centroid table (centroid_id, v): the one writer of every
+    * stored IVF model ([[buildIvfPqIndex]],
+    * [[Dedup.buildEmbeddingDedupState]]); [[readCentroids]] is its one
+    * reader. */
+  private[graft] def writeCentroids(spark: SparkSession, centroids: Seq[Array[Double]],
+                                    dir: String): Unit = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
+      .toDF("centroid_id", "v")
+      .write.mode("overwrite").parquet(dir)
+  }
+
+  /** The centroid matrix of a [[writeCentroids]] table, in id order —
+    * a driver-side, model-sized collect. */
+  private[graft] def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
+    import spark.implicits._
+    Ingestor.read(spark, dir).select("centroid_id", "v").as[(Int, Array[Double])]
+      .collect().sortBy(_._1).map(_._2)
+  }
+
   /** Driver-side (model-sized) load of a stored index's centroid matrix
     * and codebooks; the codes table is NOT loaded here — it streams
     * from parquet at search time. */
@@ -957,9 +948,7 @@ object Similarity {
                              dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     import spark.implicits._
-    val centArr = Ingestor.read(spark, s"$dir/centroids")
-      .select("centroid_id", "v").as[(Int, Array[Double])]
-      .collect().sortBy(_._1).map(_._2)
+    val centArr = readCentroids(spark, s"$dir/centroids")
     val cbRows = Ingestor.read(spark, s"$dir/codebooks")
       .select("subspace", "code", "v").as[(Int, Int, Array[Double])]
       .collect()

@@ -120,6 +120,33 @@ object EventStream {
     ()
   }
 
+  /** Write `df` as the `__batch_id = batchId` partition of `dir` by
+    * dynamic-partition overwrite: a replayed batch replaces its own
+    * partition instead of appending duplicates. Every batch sink here
+    * writes through it. */
+  private[graft] def writeBatch(df: DataFrame, batchId: Long, dir: String): Unit =
+    df.withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id")
+      .parquet(dir)
+
+  /** The rows of a [[writeBatch]] table from batches STRICTLY before
+    * `batchId` — the state read a stateful sink's replay contract rests
+    * on: a replayed batch sees exactly what its first attempt saw. None
+    * on the first batch (no table yet), and on a directory a crash left
+    * before any part file committed, whose read fails exactly like a
+    * missing one, so the contract holds for crashes inside a write. */
+  private[graft] def earlierBatches(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String, batchId: Long): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    else
+      try Some(Ingestor.read(spark, dir)
+        .where(col("__batch_id") < batchId).drop("__batch_id"))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+  }
+
   /** Streaming corpus ingestion with ALL-HISTORY near-dup dedup: the
     * near-duplicate counterpart of [[dedupIngestSink]]. Each micro-batch
     * is shingled once, probes the DURABLE band-bucket table
@@ -163,34 +190,15 @@ object EventStream {
     val spark = batch.sparkSession
     val setsDir = s"$stateDir/shingle_sets"
     val bktDir = s"$stateDir/band_buckets"
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def earlier(dir: String): Option[DataFrame] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-        None // first batch (or its replay): empty state bootstrap
-      else
-        // a crash after the directory is created but before any part
-        // file commits leaves an existing-but-empty dir; schema
-        // inference then fails — treat it exactly like a missing one,
-        // so the replay contract holds for crashes INSIDE a write too
-        try Some(Ingestor.read(spark, dir)
-          .where(col("__batch_id") < batchId).drop("__batch_id"))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
     val emptySets = graft.operators.Dedup.shingleHashSets(batch.limit(0))
-    val exSets = earlier(setsDir).getOrElse(emptySets)
-    val exBkts = earlier(bktDir)
+    val exSets = earlierBatches(spark, setsDir, batchId).getOrElse(emptySets)
+    val exBkts = earlierBatches(spark, bktDir, batchId)
       .getOrElse(graft.operators.Dedup.bandBuckets(emptySets))
     val (kept, keptSets, keptBuckets) =
       graft.operators.Dedup.nearDupStateStep(exSets, exBkts, batch, threshold)
-    def writeIdempotent(df: DataFrame, dir: String): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(dir)
-    writeIdempotent(kept, corpusDir)
-    writeIdempotent(keptSets, setsDir)
-    writeIdempotent(keptBuckets, bktDir)
+    writeBatch(kept, batchId, corpusDir)
+    writeBatch(keptSets, batchId, setsDir)
+    writeBatch(keptBuckets, batchId, bktDir)
   }
 
   /** Streaming EMBEDDING corpus ingestion with all-history near-dup
@@ -232,41 +240,19 @@ object EventStream {
                                                stateDir: String,
                                                threshold: Double): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val vecsDir = s"$stateDir/vectors"
     val cellsDir = s"$stateDir/cells"
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the model's tables are immutable; batch-state partitions follow
-    // the same strictly-earlier read rule as the text sink (incl. the
-    // exists-but-empty crash window)
-    def earlier(dir: String): Option[DataFrame] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) None
-      else
-        try Some(Ingestor.read(spark, dir)
-          .where(col("__batch_id") < batchId).drop("__batch_id"))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val assign = Ingestor.read(spark, s"$modelDir/meta")
-      .select("assign").as[Int].head()
-    val centroids: Seq[Array[Double]] = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(Ingestor.read(spark, s"$modelDir/centroids")
-        .select("centroid_id", "v").as[(Int, Array[Double])]
-        .collect().sortBy(_._1).map(_._2))
-    val baseVecs = Ingestor.read(spark, s"$modelDir/vectors")
-    val baseCells = Ingestor.read(spark, s"$modelDir/cells")
-    val exVecs = earlier(vecsDir).map(baseVecs.unionByName(_)).getOrElse(baseVecs)
-    val exCells = earlier(cellsDir).map(baseCells.unionByName(_)).getOrElse(baseCells)
+    // the same strictly-earlier read rule as the text sink
+    val model = graft.operators.Dedup.storedEmbeddingModel(spark, modelDir)
+    def withEarlier(base: DataFrame, dir: String) =
+      earlierBatches(spark, dir, batchId).map(base.unionByName(_)).getOrElse(base)
     val (kept, keptVecs, keptCells) = graft.operators.Dedup.embeddingStateStep(
-      exVecs, exCells, centroids, batch, threshold, assign)
-    def writeIdempotent(df: DataFrame, dir: String): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(dir)
-    writeIdempotent(kept, corpusDir)
-    writeIdempotent(keptVecs, vecsDir)
-    writeIdempotent(keptCells, cellsDir)
+      withEarlier(model.vectors, vecsDir), withEarlier(model.cells, cellsDir),
+      model.centroids, batch, threshold, model.assign)
+    writeBatch(kept, batchId, corpusDir)
+    writeBatch(keptVecs, batchId, vecsDir)
+    writeBatch(keptCells, batchId, cellsDir)
   }
 
   /** Streaming ANN serving over a STORED IVF-PQ index
@@ -303,13 +289,8 @@ object EventStream {
                                    corpus: DataFrame, indexDir: String,
                                    resultsDir: String, k: Int, nprobe: Int,
                                    refine: Int): Unit =
-    graft.operators.Similarity
-      .searchIvfPqIndexFrom(batch, corpus, indexDir, k, nprobe, refine)
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(resultsDir)
+    writeBatch(graft.operators.Similarity
+      .searchIvfPqIndexFrom(batch, corpus, indexDir, k, nprobe, refine), batchId, resultsDir)
 
   /** Streaming corpus ingestion with benchmark decontamination: each
     * micro-batch drops documents sharing any n-gram with the STORED
@@ -387,16 +368,9 @@ object EventStream {
     val merged = graft.operators.Sketches.mergeHeavyHitterSummaries(
       latestBelow(sumDir).getOrElse(batchSummary.limit(0))
         .unionByName(batchSummary), k)
-    def writeIdempotent(df: DataFrame, dir: String): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(dir)
-    writeIdempotent(merged.coalesce(1), sumDir)
+    writeBatch(merged.coalesce(1), batchId, sumDir)
     import spark.implicits._
-    writeIdempotent(
-      Seq((priorN + batchN, k)).toDF("cum_n", "k"), totDir)
+    writeBatch(Seq((priorN + batchN, k)).toDF("cum_n", "k"), batchId, totDir)
   }
 
   /** Serving read of the durable heavy-hitter state: current top-K
@@ -453,12 +427,8 @@ object EventStream {
   private[graft] def driftMonitorBatch(batch: DataFrame, batchId: Long,
                                        dims: Seq[(String, org.apache.spark.sql.Column)],
                                        refDir: String, reportDir: String): Unit =
-    graft.operators.Cdc.driftAgainstReference(batch, dims, refDir)
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(reportDir)
+    writeBatch(graft.operators.Cdc.driftAgainstReference(batch, dims, refDir),
+      batchId, reportDir)
 
   /** Streaming media ingestion behind the codec-free corruption screen
     * ([[graft.operators.Multimodal.screenMedia]]): each micro-batch of
@@ -497,16 +467,10 @@ object EventStream {
       .screenMedia(batch, maxBytes, maxPixels, allowedFormats, minDistinctBytes)
       .toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def writeIdempotent(df: DataFrame, dir: String): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(dir)
-    writeIdempotent(
+    writeBatch(
       batch.join(screened.where(col("ok")).select("doc_id"), Seq("doc_id"), "left_semi"),
-      corpusDir)
-    writeIdempotent(screened.where(!col("ok")), quarantineDir)
+      batchId, corpusDir)
+    writeBatch(screened.where(!col("ok")), batchId, quarantineDir)
     screened.unpersist(false)
   }
 
@@ -525,12 +489,8 @@ object EventStream {
   private[graft] def decontaminateIngestBatch(batch: DataFrame, batchId: Long,
                                               indexDir: String,
                                               corpusDir: String): Unit =
-    graft.operators.Contamination.decontaminateIndexed(batch, indexDir)
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(corpusDir)
+    writeBatch(graft.operators.Contamination.decontaminateIndexed(batch, indexDir),
+      batchId, corpusDir)
 
   /** Stream-stream interval join: each left event pairs with right
     * events for the same key within `[left.ts, left.ts + within]`. Both

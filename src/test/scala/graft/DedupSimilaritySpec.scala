@@ -677,6 +677,44 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(recall >= 0.3, s"ANN recall $recall vs brute") // 8 tables x 4 bits on 500 vecs
   }
 
+  test("lshBuckets: seeded planes at width 64, hashed coordinates past it") {
+    // width 64: exactly the buckets of the seeded Gaussian planes
+    val rnd = new scala.util.Random(0x517eL)
+    val planes = Array.fill(8, 4, 64)(rnd.nextGaussian())
+    val vr = new scala.util.Random(3)
+    val narrow = (0 until 50).map(i => (i.toLong, Seq.fill(64)(vr.nextGaussian())))
+    val got = Similarity.lshBuckets(Similarity.prepared(narrow.toDF("vec_id", "embedding")),
+        "v", tables = 8, bitsPerTable = 4)
+      .select("vec_id", "table_idx", "bucket").as[(Long, Int, Int)].collect().toSet
+    val want = narrow.flatMap { case (id, v) =>
+      planes.indices.map { t =>
+        (id, t, planes(t).indices.map { b =>
+          var s = 0.0; var d = 0
+          while (d < 64) { s += v(d) * planes(t)(b)(d); d += 1 }
+          if (s >= 0) 1 << b else 0
+        }.sum)
+      }
+    }.toSet
+    assert(got == want)
+    // width 96 with all signal in coordinates 64-95: head-only planes
+    // would score every vector 0 and put all 200 in one bucket per table
+    val cr = new scala.util.Random(5)
+    val centers = Array.fill(10, 32)(cr.nextGaussian())
+    val wide = (0 until 200).map { i =>
+      (i.toLong, Seq.fill(64)(0.0) ++ centers(i % 10).map(_ + 0.2 * cr.nextGaussian()))
+    }.toDF("vec_id", "embedding")
+    val spread = Similarity.lshBuckets(Similarity.prepared(wide), "v",
+        tables = 8, bitsPerTable = 4)
+      .groupBy("table_idx").agg(countDistinct("bucket")).as[(Int, Long)].collect()
+    assert(spread.length == 8 && spread.forall(_._2 > 1), spread.toSeq)
+    val brute = Similarity.knnBrute(wide, col("vec_id") < 20, k = 10)
+      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+    val approx = Similarity.knnLsh(wide, col("vec_id") < 20, k = 10)
+      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
+    val recall = approx.intersect(brute).size.toDouble / brute.size
+    assert(recall >= 0.8, s"width-96 LSH recall $recall vs brute")
+  }
+
   test("knnIvfPq: shipping codes costs ~no recall vs the vector-shipping IVF path") {
     val emb = spark.read.parquet(s"$docsDir/embeddings.parquet")
     val brute = Similarity.knnBrute(emb, col("vec_id") < 5, k = 10)

@@ -93,6 +93,69 @@ class IvfTrainingSpec extends SparkSpec {
     assert(one(0).sameElements(seed0) && !one(1).sameElements(seed0))
   }
 
+  /** The nearest-cell rule, written out on the driver: the `a` best
+    * cells by dot product, an exact tie (IEEE `==`) to the higher id, and
+    * a NaN dot never ranks. */
+  private def ruleCells(v: Array[Double], cents: Array[Array[Double]], a: Int): Seq[Int] = {
+    val dots = cents.map(dot(v, _))
+    cents.indices.filterNot(dots(_).isNaN)
+      .sortWith((x, y) => dots(x) > dots(y) || (dots(x) == dots(y) && x > y))
+      .take(a)
+  }
+
+  test("every nearest-cell consumer follows one rule: ties, +-0.0 and NaN") {
+    // seeds (the first 5 rows by xxhash64) form a matrix whose rows 0/2
+    // and 1/4 are copies; the other rows tie between the copies, score
+    // only zeros (from -0.0 products too), or carry a NaN
+    val mat = Array(Array(1.0, 0, 0, 0), Array(0.0, 1, 0, 0), Array(1.0, 0, 0, 0),
+      Array(0.0, 0, 1, 0), Array(0.0, 1, 0, 0))
+    val probes = Seq(Array(2.0, 0, 0, 0), Array(1.0, 1, 0, 0), Array(0.5, 0.5, 0.5, 0),
+      Array(-0.0, -0.0, -0.0, -0.0), Array(-1.0, 0, 0, 0), Array(0.0, -0.0, 0, 3),
+      Array(Double.NaN, 0, 0, 0), Array(0.3, -0.2, 0.9, 0.1), Array(-0.4, 0.8, 0.1, -0.6))
+    val n = mat.length + probes.length
+    val order = spark.range(0, n).orderBy(xxhash64(col("id")), col("id")).as[Long].collect()
+    val vecOf: Map[Long, Array[Double]] = order.zip(mat ++ probes).toMap
+    val emb = spark.createDataFrame(spark.sparkContext.parallelize(
+        vecOf.toSeq.map { case (id, v) => (id, v.toSeq) }, 3))
+      .toDF("vec_id", "embedding")
+    val e = Similarity.prepared(emb)
+    def want(a: Int): Set[(Long, Int)] =
+      vecOf.toSeq.flatMap { case (id, v) => ruleCells(v, mat, a).map(id -> _) }.toSet
+    val nanId = order(mat.length + 6)
+    assert(!want(3).exists(_._1 == nanId) && want(1).size == n - 1)
+
+    // Lloyd: one round from the matrix, against the driver Lloyd
+    val lloyd = Similarity.trainIvfCentroids(e, mat.length, iterations = 1)
+    assertClose(referenceLloyd(vecOf.values.toSeq, mat, 1)((cur, v) =>
+      ruleCells(v, cur, 1).map(_ -> v)).toSeq, lloyd)
+    // the twins' rows went to the higher copies: 0 and 1 kept their seed
+    assert(lloyd(0).sameElements(mat(0)) && lloyd(1).sameElements(mat(1)))
+
+    for (a <- 1 to 3) {
+      assert(Similarity.cellAssignments(e, mat.toSeq, a).as[(Long, Int)].collect().toSet ==
+        want(a), s"cellAssignments assign=$a")
+      // the probe pass of knnIvf and pqSearch, with each probe's score
+      val probed = Similarity.probeCells(e, mat, a).collect()
+      assert(probed.map(p => (p._1, p._4)).toSet == want(a), s"probes nprobe=$a")
+      assert(probed.forall(p => p._5 == dot(vecOf(p._1), mat(p._4))))
+    }
+    // the nearest-cell pass: knnIvf's corpus side and trainIvfPq's residuals
+    val nearest = Similarity.nearestCell(e, mat, residual = true)
+      .as[(Long, Int, Array[Double], Double)].collect()
+    assert(nearest.map(r => (r._1, r._2)).toSet == want(1))
+    assert(nearest.forall { case (id, c, r, _) =>
+      r.sameElements(vecOf(id).zip(mat(c)).map { case (x, y) => x - y }) })
+
+    // extendIvfPqIndex against a stored index whose centroids are the matrix
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rule").toString
+    Similarity.buildIvfPqIndex(emb.where(col("vec_id") =!= nanId), dir,
+      centroidsK = 3, m = 2, kSub = 2)
+    Similarity.writeCentroids(spark, mat.toSeq, s"$dir/centroids")
+    Similarity.extendIvfPqIndex(emb, lit(true), dir, 1L)
+    assert(spark.read.parquet(s"$dir/codes_inc").select("vec_id", "centroid_id")
+      .as[(Long, Int)].collect().toSet == want(1))
+  }
+
   test("PQ codebooks match a driver-side Lloyd over the residuals") {
     val (m, kSub) = (4, 8)
     val e = Similarity.prepared(input)
